@@ -81,7 +81,12 @@ final class MeasureScan(options: CaseInsensitiveStringMap) extends Scan {
 final case class FeedSecurity(mode: String, keystore: String,
                               password: String, alias: String,
                               serverCert: String) {
-  def setup: OpcuaSecure.SecuritySetup = OpcuaSecure.SecuritySetup(
+  /** The loaded material, shared by every reader in this JVM until the
+    * keystore or server certificate file changes.
+    */
+  def setup: OpcuaSecure.SecuritySetup = FeedSecurity.setupOf(this)
+
+  private def load(): OpcuaSecure.SecuritySetup = OpcuaSecure.SecuritySetup(
     mode match {
       case "sign" => OpcuaCrypto.SecurityModeSign
       case "signencrypt" => OpcuaCrypto.SecurityModeSignAndEncrypt
@@ -93,6 +98,25 @@ final case class FeedSecurity(mode: String, keystore: String,
 }
 
 object FeedSecurity {
+  // Loading the PKCS#12 decrypts it with PBKDF2; each partition reader of
+  // each batch would otherwise pay that again. Keyed on the value, and
+  // reloaded when either file's size or mtime moves (a rotated keystore).
+  private type Stamp = (Long, java.nio.file.attribute.FileTime)
+  private val loaded = new java.util.concurrent.ConcurrentHashMap[
+    FeedSecurity, ((Stamp, Stamp), OpcuaSecure.SecuritySetup)]()
+
+  private def stamp(path: String): Stamp = {
+    val a = java.nio.file.Files.readAttributes(java.nio.file.Paths.get(path),
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    (a.size, a.lastModifiedTime)
+  }
+
+  private def setupOf(s: FeedSecurity): OpcuaSecure.SecuritySetup = {
+    val files = (stamp(s.keystore), stamp(s.serverCert))
+    loaded.compute(s, (_, prev) =>
+      if (prev != null && prev._1 == files) prev else (files, s.load()))._2
+  }
+
   def fromOptions(options: CaseInsensitiveStringMap): Option[FeedSecurity] =
     Option(options.get("secMode")).map { m =>
       FeedSecurity(m,
@@ -209,8 +233,9 @@ final class SocketRangeReader(r: MeasureRange, host: String,
                               chunkRows: Long = 65536L)
     extends PartitionReader[InternalRow] {
   require(chunkRows > 0, s"chunkRows must be positive, got $chunkRows")
+  private[graft] val security = r.feedSecurity.map(_.setup)
   private val client = new FeedTransport.SocketMeasureFeed(host, r.feedPort,
-    security = r.feedSecurity.map(_.setup))
+    security = security)
   private var chunkStart = r.lo
   private var rows: Iterator[(String, String, Double, Long, Boolean)] = Iterator.empty
   private var seq = r.lo - 1

@@ -159,7 +159,6 @@ object CurrentValuesSink {
                              measureValue: org.apache.spark.sql.Column,
                              enrich: DataFrame => DataFrame = identity): Unit = {
     import batch.sparkSession.implicits._
-    if (batch.isEmpty) return
     val withId =
       if (batch.columns.contains("event_seq"))
         batch.withColumn("event_id", col("event_seq"))

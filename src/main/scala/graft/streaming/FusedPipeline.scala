@@ -93,7 +93,6 @@ object FusedPipeline {
                                     target: CurrentValuesSink.UpsertTarget,
                                     slope: Double, offset: Double): Unit = {
     import batch.sparkSession.implicits._
-    if (batch.isEmpty) return
     val df = batch.toDF()
     val values = df.filter(col("kind") === "value")
       .withColumn("tag_value", bround(col("raw_value"), 3))
@@ -135,6 +134,7 @@ object FusedPipeline {
             slope: Double, offset: Double,
             profile: IngestProfile,
             checkpointDir: Option[String]): IngestPipeline.Handle = {
+    LocalCheckpointFs.install(raw.sparkSession)
     val trigger = profile.trigger
     val g = IngestPipeline.gated(raw, profile.watermarkDelay)
     import g.sparkSession.implicits._

@@ -71,6 +71,7 @@ object IngestPipeline {
             slope: Double, offset: Double,
             profile: IngestProfile,
             checkpointDir: Option[String]): Handle = {
+    LocalCheckpointFs.install(raw.sparkSession)
     val trigger = profile.trigger
     val g = gated(raw, profile.watermarkDelay)
 
@@ -124,6 +125,7 @@ object IngestPipeline {
   def startScaled(raw: DataFrame, target: UpsertTarget, scaling: DataFrame,
                   trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
                   checkpointDir: Option[String] = None): Handle = {
+    LocalCheckpointFs.install(raw.sparkSession)
     val g = gated(raw)
     val valueWriter = CurrentValuesSink
       .writerScaled(Gates.qualityGate(g), target, scaling, trigger)
@@ -145,13 +147,15 @@ object IngestPipeline {
   def heartbeatQuery(spark: SparkSession, target: UpsertTarget,
                      trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
                      now: () => java.sql.Timestamp = () =>
-                       java.sql.Timestamp.from(java.time.Instant.now())): StreamingQuery =
+                       java.sql.Timestamp.from(java.time.Instant.now())): StreamingQuery = {
+    LocalCheckpointFs.install(spark)
     spark.readStream.format("rate").option("rowsPerSecond", 1).load()
       .writeStream.outputMode("append").trigger(trigger)
       .foreachBatch { (_: DataFrame, _: Long) =>
         CurrentValuesSink.heartbeat(target, formatTs(now()))
       }
       .queryName("graft-heartbeat").start()
+  }
 
   /** T3 fan-out (reference `:980-997`): a server silent for 3 minutes
     * marks EVERY device of that server offline. The stream carries
@@ -171,7 +175,8 @@ object IngestPipeline {
     */
   def watchdogQuery(withServer: DataFrame, deviceDim: DataFrame,
                     target: UpsertTarget,
-                    trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
+                    trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
+    LocalCheckpointFs.install(withServer.sparkSession)
     ServerWatchdog.silenceEvents(withServer)
       .writeStream.outputMode("append").trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ServerWatchdog.SilenceEvent], _: Long) =>
@@ -191,6 +196,7 @@ object IngestPipeline {
           (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
       }
       .queryName("graft-watchdog").start()
+  }
 
   /** Convenience: open the simulated DataSource V2 source and run the full
     * pipeline against it (the shape a production OPC UA connector plugs

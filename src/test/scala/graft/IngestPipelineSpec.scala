@@ -45,6 +45,36 @@ class IngestPipelineSpec extends SparkSpec {
     } finally handle.stop()
   }
 
+  test("both queries count exactly the injected redeliveries as dropped duplicates") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[MeasureEvent]
+    val target = new InMemoryTarget
+    val handle = IngestPipeline.start(input.toDF(), target,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+    def dropped(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+      q.recentProgress.flatMap(_.stateOperators)
+        .flatMap(op => Option(op.customMetrics.get("numDroppedDuplicateRows")))
+        .map(_.longValue).sum
+    try {
+      var injected = 0
+      var previous = Seq.empty[MeasureEvent]
+      (0 until 4).foreach { b =>
+        val fresh = for (d <- 0 until 20; m <- Seq("temp", "rpm"))
+          yield MeasureEvent(s"d$d", m, (b * 100 + d).toDouble,
+            ts(s"2024-01-01 00:00:1$b"), status_ok = d % 5 != 0)
+        // redeliver every third event of this batch and every fourth of the last
+        val redelivered = fresh.zipWithIndex.collect { case (e, i) if i % 3 == 0 => e } ++
+          previous.zipWithIndex.collect { case (e, i) if i % 4 == 0 => e }
+        injected += redelivered.size
+        input.addData(new scala.util.Random(b).shuffle(fresh ++ redelivered): _*)
+        handle.processAllAvailable()
+        previous = fresh
+      }
+      assert(dropped(handle.livenessQuery) == injected)
+      assert(dropped(handle.valueQuery) == injected)
+    } finally { handle.stop(); target.close() }
+  }
+
   test("ReferenceFreshness profile: same pipeline semantics, 10 s dedup horizon (r12 verdict #8)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[MeasureEvent]

@@ -367,6 +367,31 @@ class OpcuaSecureSpec extends AnyFunSuite {
     }
   }
 
+  test("readers share one loaded identity per JVM; a rewritten keystore is read again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sec-memo")
+    val ksPath = dir.resolve("client.p12")
+    val certPath = dir.resolve("server.der")
+    saveIdentity(clientIdent, ksPath.toString, "testpass", "graft")
+    java.nio.file.Files.write(certPath, serverIdent.certDer)
+    val sec = graft.sources.FeedSecurity("signencrypt", ksPath.toString, "testpass", "graft",
+      certPath.toString)
+    val range = graft.sources.MeasureRange(0L, 6L, 3, 2, 1704067200000000L, 5000000L,
+      feedHost = Some("127.0.0.1"), feedPort = 1, feedSecurity = Some(sec))
+    // readers connect lazily, so building them touches only the key material
+    def identity(): Identity = {
+      val r = new graft.sources.SocketRangeReader(range, "127.0.0.1")
+      try r.security.get.local finally r.close()
+    }
+    val first = identity()
+    assert(identity() eq first)
+    assert(first.certDer.sameElements(clientIdent.certDer))
+    saveIdentity(serverIdent, ksPath.toString, "testpass", "graft")
+    val rotated = identity()
+    assert(rotated ne first)
+    assert(rotated.certDer.sameElements(serverIdent.certDer))
+    assert(identity() eq rotated)
+  }
+
   test("None-policy clients still work against a secured-capable server") {
     withSecureServer { (server, feed) =>
       val c = new SessionClient("127.0.0.1", server.boundPort) // plaintext
