@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -139,14 +139,8 @@ object Bench {
     // decades, not 5% precision — 4 executions/query at 10x data is a
     // wall-clock no-go). Official driver runs keep the 3-pass default.
     val ioCodec = sys.env.get("SPARK_GRAFT_IO_CODEC")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = ioCodec.fold(b0)(c => b0.config("spark.io.compression.codec", c))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(s"local[$cpus]", shufflePartitions,
+      extra = ioCodec.map("spark.io.compression.codec" -> _).toMap)
     val calibBefore = calibrate()
     // optional args = query-name filter (local iteration; driver passes none)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,6 +1,5 @@
 package graft
 
-import java.sql.DriverManager
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Multi-JVM execution parity audit (r10 verdict #1): every bench, soak
@@ -159,52 +158,23 @@ object ClusterParity {
 
   // ---- sessions ----
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar")
-    .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-
   /** Fresh session on the given master; `local-cluster` additionally
     * ships the driver's full classpath + JDK17 add-opens to the executor
     * JVMs (sbt's forked classpath is not in their environment) and sizes
     * `spark.executor.memory` to the worker's offer.
     */
   def session(master: String): SparkSession = {
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-parity-$master")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val withCluster =
-      if (master.startsWith("local-cluster")) b
-        .config("spark.executor.memory", "4g")
-        .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions", addOpens)
-      else b
-    val s = withCluster.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    val cluster =
+      if (master.startsWith("local-cluster")) Map(
+        "spark.executor.memory" -> "4g",
+        "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
+        "spark.executor.extraJavaOptions" -> Harness.AddOpens.mkString(" "))
+      else Map.empty[String, String]
+    Harness.session(master, 32,
+      extra = cluster + ("spark.app.name" -> s"graft-parity-$master"))
   }
 
   // ---- streaming pipeline flow (closures must cross the JVM boundary) ----
-
-  /** Same modvalues-shaped table the reference keeps (Soak.scala's DDL). */
-  private val PipelineDdl =
-    """CREATE TABLE modvalues (
-      |  device VARCHAR(200) NOT NULL,
-      |  measure_name VARCHAR(200) NOT NULL,
-      |  tag_value REAL,
-      |  measure_value REAL,
-      |  last_updated VARCHAR(64),
-      |  PRIMARY KEY (device, measure_name)
-      |)""".stripMargin
 
   /** MemoryStream → IngestPipeline → executor-side keyed upsert into an
     * ephemeral Postgres reached over TCP (the one target kind that works
@@ -216,20 +186,7 @@ object ClusterParity {
   def pipelineFlow(spark: SparkSession): Seq[String] = {
     import spark.implicits._
     import graft.streaming._
-    val server = graft.control.PgEphemeral.start() match {
-      case Right(s) => s
-      case Left(reason) => sys.error(s"parity pipeline needs ephemeral postgres: $reason")
-    }
-    try {
-      server.createDatabase("parity")
-      val pgPort = server.port // capture ONLY the port (90f1288's lesson)
-      val connect: () => java.sql.Connection =
-        () => graft.control.PgWire.connect("127.0.0.1", pgPort, "postgres", "parity")
-      locally {
-        val c = connect(); val st = c.createStatement()
-        st.execute(PipelineDdl); st.close(); c.close()
-      }
-      val target = new JdbcUpsert.Target(connect, dialect = JdbcUpsert.Postgres)
+    Harness.withModvalues("parity") { (connect, target) =>
       implicit val sqlCtx = spark.sqlContext
       val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[MeasureEvent]
       val handle = IngestPipeline.start(input.toDF(), target, slope = 2.0, offset = 1.0,
@@ -264,7 +221,7 @@ object ClusterParity {
         rs.getString(5)).mkString("\u001F") // same separator contract as `lines`
       rs.close(); st.close(); c.close()
       out.result()
-    } finally server.stop()
+    }
   }
 
   // ---- main ----
@@ -290,10 +247,7 @@ object ClusterParity {
         }.toMap
         val pipe = pipelineFlow(spark)
         (sigs, pipe, (System.nanoTime() - t0) / 1e9)
-      } finally {
-        spark.stop()
-        SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      }
+      } finally spark.stop()
     }
 
     val (localSigs, localPipe, localSec) = runSlice("local[32]")

@@ -47,29 +47,7 @@ object CrashSoak {
     val ticksPerFire = 4L
 
     // ---- the database the crash must not lose ----
-    val server = graft.control.PgEphemeral.start() match {
-      case Right(s) => s
-      case Left(reason) => sys.error(s"crash soak needs ephemeral postgres: $reason")
-    }
-    val rc = try {
-      server.createDatabase("crash")
-      val pgPort = server.port
-      def connect() = graft.control.PgWire.connect("127.0.0.1", pgPort, "postgres", "crash")
-      locally {
-        val c = connect(); val st = c.createStatement()
-        st.execute(
-          """CREATE TABLE modvalues (
-            |  device VARCHAR(200) NOT NULL,
-            |  measure_name VARCHAR(200) NOT NULL,
-            |  tag_value REAL,
-            |  measure_value REAL,
-            |  last_updated VARCHAR(64),
-            |  PRIMARY KEY (device, measure_name)
-            |)""".stripMargin)
-        st.close(); c.close()
-      }
-      val target = new graft.streaming.JdbcUpsert.Target(
-        () => connect(), dialect = graft.streaming.JdbcUpsert.Postgres)
+    val rc = Harness.withModvalues("crash") { (connect, target) =>
 
       // ---- the feed the crash must not lose ----
       val startMicros = 1704067200000000L
@@ -104,24 +82,15 @@ object CrashSoak {
       val deliveredPerInc = scala.collection.concurrent.TrieMap.empty[Int, Long]
       val childExits = mutable.ArrayBuffer.empty[(Int, Int)] // (incarnation, exit code)
 
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar")
-        .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
       val javaBin = new java.io.File(
         new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
 
       def spawn(incarnation: Int): Process = {
-        val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
+        val cmd = (Seq(javaBin) ++ Harness.AddOpens ++ Seq(
           "-Xmx6g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
           "-cp", System.getProperty("java.class.path"),
           "graft.CrashSoakChild",
-          srv.boundPort.toString, pgPort.toString,
+          srv.boundPort.toString, connect.port.toString,
           ckptDir.getAbsolutePath, stopFile.getAbsolutePath,
           nDevices.toString, nMeasures.toString, incarnation.toString))
         val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
@@ -243,7 +212,7 @@ object CrashSoak {
         mismatches.take(10).foreach(m => println(s"[crash-soak]   $m"))
       }
       if (pass) 0 else 1
-    } finally server.stop()
+    }
     if (rc != 0) sys.exit(rc)
   }
 }
@@ -257,21 +226,13 @@ object CrashSoak {
 object CrashSoakChild {
   def main(args: Array[String]): Unit = {
     val Array(feedPort, pgPort, ckptDir, stopPath, nDevices, nMeasures, incarnation) = args
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName(s"graft-crash-child-$incarnation")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("local[8]", 8, logLevel = "ERROR", extra = Map(
+      "spark.app.name" -> s"graft-crash-child-$incarnation",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
 
-    val pgPortI = pgPort.toInt // capture only the port (90f1288's lesson)
     val target = new graft.streaming.JdbcUpsert.Target(
-      () => graft.control.PgWire.connect("127.0.0.1", pgPortI, "postgres", "crash"),
-      dialect = graft.streaming.JdbcUpsert.Postgres)
+      Harness.PgConnect(pgPort.toInt, "crash"), dialect = graft.streaming.JdbcUpsert.Postgres)
 
     val delivered = new AtomicLong(0L)
     spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {

@@ -156,30 +156,8 @@ object Resilience {
                                 rng: scala.util.Random): (Seq[String], KillReport) = {
     import spark.implicits._
     import graft.streaming._
-    val server = graft.control.PgEphemeral.start() match {
-      case Right(s) => s
-      case Left(reason) => sys.error(s"resilience pipeline needs ephemeral postgres: $reason")
-    }
-    try {
-      server.createDatabase("resil")
-      val pgPort = server.port // capture ONLY the port (90f1288's lesson)
-      val connect: () => java.sql.Connection =
-        () => graft.control.PgWire.connect("127.0.0.1", pgPort, "postgres", "resil")
-      locally {
-        val c = connect(); val st = c.createStatement()
-        st.execute(
-          """CREATE TABLE modvalues (
-            |  device VARCHAR(200) NOT NULL,
-            |  measure_name VARCHAR(200) NOT NULL,
-            |  tag_value REAL,
-            |  measure_value REAL,
-            |  last_updated VARCHAR(64),
-            |  PRIMARY KEY (device, measure_name)
-            |)""".stripMargin)
-        st.close(); c.close()
-      }
+    Harness.withModvalues("resil") { (connect, target) =>
       val ckpt = java.nio.file.Files.createTempDirectory("resil-ckpt").toString
-      val target = new JdbcUpsert.Target(connect, dialect = JdbcUpsert.Postgres)
       implicit val sqlCtx = spark.sqlContext
       val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[MeasureEvent]
       val handle = IngestPipeline.start(input.toDF(), target, slope = 2.0, offset = 1.0,
@@ -234,7 +212,7 @@ object Resilience {
         rs.getString(5)).mkString("")
       rs.close(); st.close(); c.close()
       (out.result(), kill)
-    } finally server.stop()
+    }
   }
 
   // ---- main ----
@@ -259,10 +237,7 @@ object Resilience {
         awaitExecutors(spark, 2)
         val mid = streamingScenario(spark, Some(1.0), rng)
         (br, Some((calm, mid._1, mid._2)))
-      } finally {
-        spark.stop()
-        SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      }
+      } finally spark.stop()
 
     val (calmRows, killedRows, streamKill) = streamOut.get
     val streamEqual = calmRows == killedRows

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up for the self-audit: replicate an SF directory K×
@@ -48,13 +48,7 @@ object ScaleUp {
     val mode = args.lift(3).getOrElse("uniform")
     require(mode == "uniform" || mode == "zipf", s"unknown mode '$mode'")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(s"local[$cpus]", cpus.toInt)
 
     def copies(table: String)(tx: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")
@@ -161,14 +155,8 @@ object ContainmentProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "256"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(s"local[$cpus]",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "256").toInt, logLevel = "ERROR")
     import graft.operators.Dedup
     val docs = Tables.documents(spark, dir)
     val n = docs.count()
@@ -219,13 +207,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(s"local[$cpus]", cpus.toInt, logLevel = "ERROR")
     import graft.operators.Similarity
     val emb = Tables.embeddings(spark, dir).filter(col("embedding").isNotNull)
     val n = emb.count()

@@ -1,17 +1,14 @@
 package graft
 
-import java.io.File
-import java.sql.{Connection, DriverManager}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.control.{ControlPlane, ControlPlaneHttp}
 import graft.operators.BrowseJobRegistry
 import graft.operators.DtoMapping.ConnectionDto
 import graft.sources.{FeedTransport, MeasureFeed, MeasureSourceProvider}
-import graft.streaming.{ConfigReload, CurrentValuesSink, IngestPipeline, JdbcUpsert, ServerWatchdog}
+import graft.streaming.{ConfigReload, CurrentValuesSink, IngestPipeline, ServerWatchdog}
 
 /** End-to-end streaming soak (round-7 verdict stretch item): ONE sustained
   * run composing every individually-spec-green streaming piece —
@@ -23,15 +20,15 @@ import graft.streaming.{ConfigReload, CurrentValuesSink, IngestPipeline, JdbcUps
   *     → framed-socket OPC UA ingest ([[FeedTransport.FeedServer]], one
   *       server per configured connection, union of DSv2 socket sources)
   *     → gates → watermark dedup → value path + liveness state machine
-  *     → live embedded Derby via the production [[JdbcUpsert.Target]]
-  *       (AnsiMerge dialect), plus the heartbeat and server-watchdog
-  *       queries —
+  *     → a live ephemeral Postgres via the production
+  *       [[graft.streaming.JdbcUpsert.Target]] ([[Harness.withModvalues]]),
+  *       plus the heartbeat and server-watchdog queries —
   *
   * under sustained load for SPARK_GRAFT_SOAK_SECONDS (default 600),
   * publishing SOAK_r{N}.json with event counts in/out, liveness-flag
   * transitions (observed by polling the DATABASE, i.e. the user-visible
   * table, not internals), watchdog silence events, and a final-state
-  * exactness check: every (device, measure) row in Derby must equal the
+  * exactness check: every (device, measure) row in Postgres must equal the
   * last GOOD value the feed ever published for that key, recomputed
   * driver-side from the feed's pure `at(i)` function.
   *
@@ -90,28 +87,6 @@ object Soak {
 
   private final case class TimelineEvent(wallS: Double, event: String)
 
-  /** Embedded Derby's MERGE hits a NullPointerException
-    * (`MatchingClauseConstantAction._actionRS`) when prepared MERGE
-    * batches execute on concurrent connections — a Derby engine defect,
-    * not a Target one (the Postgres dialect runs the same concurrency in
-    * PgLiveSpec). The soak serializes DB access through one JVM-wide
-    * lock; local mode shares the JVM so the closure reaches the same
-    * monitor from every partition. Production (Postgres) needs none of
-    * this.
-    */
-  object DbLock extends Serializable
-  final class SerializedTarget(inner: CurrentValuesSink.UpsertTarget)
-      extends CurrentValuesSink.UpsertTarget {
-    override def upsertPartition(rows: Iterator[CurrentValuesSink.ModRow]): Unit =
-      DbLock.synchronized { inner.upsertPartition(rows) }
-    override def seed(keys: Seq[(String, String)], nowS: String): Unit =
-      DbLock.synchronized { inner.seed(keys, nowS) }
-    override def offlineReset(nowS: String): Unit =
-      DbLock.synchronized { inner.offlineReset(nowS) }
-    override def heartbeat(nowS: String): Unit =
-      DbLock.synchronized { inner.heartbeat(nowS) }
-  }
-
   def main(args: Array[String]): Unit = {
     val durationS = sys.env.getOrElse("SPARK_GRAFT_SOAK_SECONDS", "600").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK_r8.json")
@@ -120,70 +95,13 @@ object Soak {
     val nMeasures = 4
     val ticksPerFire = 4L // fired every 250 ms wall → 16 ticks/s = sim 4× wall
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(s"local[$cpus]", cpus.toInt, logLevel = "ERROR")
 
-    // ---- the user-visible modvalues table: live Derby (default) or a
-    // live ephemeral Postgres 15 through the hand-written v3 wire client
-    // (SPARK_GRAFT_SOAK_DB=pg — the r9 verdict's stretch: the same
-    // 600 s final-state-exactness contract against the PRODUCTION
-    // dialect, with CONCURRENT upserts: Postgres needs no
-    // SerializedTarget, that lock exists only for Derby's MERGE defect).
-    val dbKind = sys.env.getOrElse("SPARK_GRAFT_SOAK_DB", "derby")
-    val ddl =
-      """CREATE TABLE modvalues (
-        |  device VARCHAR(200) NOT NULL,
-        |  measure_name VARCHAR(200) NOT NULL,
-        |  tag_value REAL,
-        |  measure_value REAL,
-        |  last_updated VARCHAR(64),
-        |  PRIMARY KEY (device, measure_name)
-        |)""".stripMargin
-    val (connect: (() => Connection), target: CurrentValuesSink.UpsertTarget,
-         stopDb: (() => Unit)) = dbKind match {
-      case "derby" =>
-        val db = s"soak-${java.util.UUID.randomUUID()}"
-        DriverManager.getConnection(s"jdbc:derby:memory:$db;create=true").close()
-        val c: () => Connection =
-          () => DriverManager.getConnection(s"jdbc:derby:memory:$db")
-        (c, new SerializedTarget(
-          new JdbcUpsert.Target(c, dialect = JdbcUpsert.AnsiMerge)), () => ())
-      case "pg" =>
-        val server = graft.control.PgEphemeral.start() match {
-          case Right(s) => s
-          case Left(reason) => sys.error(s"SPARK_GRAFT_SOAK_DB=pg but: $reason")
-        }
-        // the big try/finally below only starts AFTER this tuple is built —
-        // a failure here must bring the live postgres down itself
-        try server.createDatabase("soak")
-        catch { case e: Throwable => server.stop(); throw e }
-        // capture ONLY the port (an Int): a closure over `server` drags
-        // the non-Serializable lifecycle handle into every executor task
-        // and kills the streaming writers at task-serialization time —
-        // exactly how the first pg soak run delivered 0 rows
-        val pgPort = server.port
-        val c: () => Connection =
-          () => graft.control.PgWire.connect("127.0.0.1", pgPort, "postgres", "soak")
-        (c, new JdbcUpsert.Target(c, dialect = JdbcUpsert.Postgres),
-          () => server.stop())
-      case other => sys.error(s"unknown SPARK_GRAFT_SOAK_DB '$other' (derby|pg)")
-    }
-    // DDL runs before the rc=try/finally that owns stopDb(): a CREATE
-    // TABLE failure here must not leak the ephemeral server + temp dir
-    try {
-      val c = connect()
-      val st = c.createStatement()
-      st.execute(ddl)
-      st.close(); c.close()
-    } catch { case e: Throwable => stopDb(); throw e }
-    // the ephemeral DB must come down on EVERY exit path — a mid-run
-    // exception otherwise leaks a live postgres process + data dir
-    val rc = try {
+    // ---- the user-visible modvalues table: a live ephemeral Postgres 15
+    // through the hand-written v3 wire client, written with the
+    // production dialect by concurrent upserts; the fixture stops the
+    // server on every exit path
+    val rc = Harness.withModvalues("soak") { (connect, target) =>
 
     // ---- two framed-socket feed servers ----
     val startMicros = 1704067200000000L
@@ -481,7 +399,7 @@ object Soak {
       (durationS < 420 || (bOffline == nDevices && silenceEvents.size() >= 1 &&
         mutations.values.forall(_ == 200)))
     val json =
-      f"""{"metric":"soak","db":"$dbKind","duration_sec":$durationS,"offered":$offered,"offered_a":$offeredA,"offered_b":$offeredB,"delivered":$del,"delivered_vs_offered":${del.toDouble / offered}%.2f,"relaunches":${relaunches.get()},"config_mutations":{"add":${mutations.getOrElse("add", -1)},"update":${mutations.getOrElse("update", -1)},"delete":${mutations.getOrElse("delete", -1)}},"liveness_offline_transitions":${offlineTransitions.get()},"liveness_online_transitions":${onlineTransitions.get()},"watchdog_silence_events":${silenceEvents.size()},"final_a_online":$aOnline,"final_b_offline":$bOffline,"final_state_keys":${expected.size},"final_state_mismatches":${mismatches.size},"zero_loss_final_state":${mismatches.isEmpty},"pass":$pass,"timeline":$timelineJson}"""
+      f"""{"metric":"soak","db":"pg","duration_sec":$durationS,"offered":$offered,"offered_a":$offeredA,"offered_b":$offeredB,"delivered":$del,"delivered_vs_offered":${del.toDouble / offered}%.2f,"relaunches":${relaunches.get()},"config_mutations":{"add":${mutations.getOrElse("add", -1)},"update":${mutations.getOrElse("update", -1)},"delete":${mutations.getOrElse("delete", -1)}},"liveness_offline_transitions":${offlineTransitions.get()},"liveness_online_transitions":${onlineTransitions.get()},"watchdog_silence_events":${silenceEvents.size()},"final_a_online":$aOnline,"final_b_offline":$bOffline,"final_state_keys":${expected.size},"final_state_mismatches":${mismatches.size},"zero_loss_final_state":${mismatches.isEmpty},"pass":$pass,"timeline":$timelineJson}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(json)
@@ -491,7 +409,7 @@ object Soak {
     }
     spark.stop()
     if (pass) 0 else 1
-    } finally stopDb()
+    }
     if (rc != 0) sys.exit(rc)
   }
 }

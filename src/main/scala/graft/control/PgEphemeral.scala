@@ -6,8 +6,9 @@ import scala.sys.process.{Process, ProcessLogger}
 /** Ephemeral Postgres 15 lifecycle — initdb (trust auth) into a temp
   * dir, pg_ctl start on a free port, readiness-probed through [[PgWire]]
   * itself, torn down with `pg_ctl -m immediate stop`. Shared by
-  * PgLiveSpec (engine-verifies the Postgres dialect) and the soak's
-  * `SPARK_GRAFT_SOAK_DB=pg` mode. `start()` returns Left(reason) where
+  * PgLiveSpec (engine-verifies the Postgres dialect), the harness
+  * mains' `graft.Harness.withModvalues` fixture and the benchmark's
+  * ingest runs. `start()` returns Left(reason) where
   * no server can run (no binaries, root JVM without a postgres OS user)
   * — callers cancel/skip rather than fail.
   */

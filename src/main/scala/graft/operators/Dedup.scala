@@ -178,7 +178,7 @@ object Dedup {
     // shuffle (not broadcast) self-join: both sides canonicalize to the
     // SAME exchange, so the signature pipeline runs once and the second
     // side is a ReusedExchange — re-verified at RUNTIME round 10 (the
-    // final adaptive plan carries the reuse node; PlanAudit
+    // final adaptive plan carries the reuse node; PlanDump
     // GRAFT_EXECUTE). Broadcasting one side would recompute the whole
     // minhash for it (and could never broadcast at corpus scale).
     a.hint("shuffle_hash").join(b.hint("shuffle_hash"), Seq("band", "bh"))

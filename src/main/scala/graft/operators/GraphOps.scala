@@ -22,8 +22,9 @@ object GraphOps {
       .sum
 
   /** Scale-adaptive edge-layout decision (round 16 — wiring the r15
-    * `GraphAdjExp` adjudication into the declared graph queries): when
-    * the input behind an edge frame is big enough that the in-memory /
+    * bucketed-adjacency experiment, OPTIMIZATION_r15.md, into the
+    * declared graph queries): when the input behind an edge frame is
+    * big enough that the in-memory /
     * DISK_ONLY cache path starts paying serialized-cache writes + reads
     * per round under memory pressure, materialize the shared edge grain
     * as a BUCKETED parquet table instead (bucket count ≈ the session's
@@ -310,10 +311,10 @@ object GraphOps {
   def triangleCounts(edges: DataFrame): DataFrame = {
     // Round-15 optimization note (measured, kept AS-IS): two rewrites
     // were tried at the sf10-zipf corpus and REVERTED on measurement
-    // (graft.TriExp is the experiment harness, OPTIMIZATION_r15.md the
-    // numbers). (1) A wedge Bloom pre-filter (guide §3.2) before the
-    // closure join: building the filter over the 15M oriented tip-edge
-    // keys cost 18.1 s (stat.bloomFilter's per-partition 18 MB partials)
+    // (OPTIMIZATION_r15.md keeps the numbers). (1) A wedge Bloom
+    // pre-filter (guide §3.2) before the closure join: building the
+    // filter over the 15M oriented tip-edge keys cost 18.1 s
+    // (stat.bloomFilter's per-partition 18 MB partials)
     // while the ENTIRE wedge stream it would prune is only ~103k rows on
     // this graph — the fixture's orientation keeps wedge volume tiny, so
     // the closure exchange was never the cost. (2) Grouped (u → sorted

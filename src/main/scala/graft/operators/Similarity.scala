@@ -638,7 +638,7 @@ object Similarity {
     // shuffle (not broadcast) self-join: both sides canonicalize to the
     // same exchange, so the bucket+vector pipeline runs ONCE and the
     // second side reads the shuffled blocks (ReusedExchange). Verified
-    // at RUNTIME round 10 — PlanAudit GRAFT_EXECUTE executes the query's
+    // at RUNTIME round 10 — PlanDump GRAFT_EXECUTE executes the query's
     // own adaptive plan and counts reuse nodes in the final plan (the
     // initial AQE plan prints both branches unreused, which briefly
     // mis-adjudicated this as an AQE stage-cache miss).

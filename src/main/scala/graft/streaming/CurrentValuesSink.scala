@@ -179,24 +179,21 @@ object CurrentValuesSink {
   def writer(gated: DataFrame, target: UpsertTarget,
              slope: Double = 1.0, offset: Double = 0.0,
              trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
-    gated.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, target, slope, offset)
-      }
+    writerWith(gated, trigger)(applyBatch(_, target, slope, offset))
 
   /** Production writer: per-point scaling from the config dim (see
     * [[applyBatchScaled]]), the full reference semantics.
     */
   def writerScaled(gated: DataFrame, target: UpsertTarget, scaling: DataFrame,
                    trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
+    writerWith(gated, trigger)(applyBatchScaled(_, target, scaling))
+
+  private def writerWith(gated: DataFrame, trigger: Trigger)(
+      apply: DataFrame => Unit): DataStreamWriter[Row] =
     gated.writeStream
       .outputMode("append")
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatchScaled(batch, target, scaling)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => apply(batch) }
 
   /** K1 seed + K3 startup reset (`Services/OpcSubscribeService.cs:656-713,
     * 717-739`): seed zero rows for unseen keys + one myPV_online row per

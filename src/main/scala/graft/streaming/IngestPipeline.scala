@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.operators.{CurrentValues, Gates}
-import graft.sources.MeasureSourceProvider
 import graft.streaming.CurrentValuesSink.UpsertTarget
 
 /** The reference's full data path (SURVEY.md §3.1) wired end-to-end in
@@ -70,20 +69,26 @@ object IngestPipeline {
   def start(raw: DataFrame, target: UpsertTarget,
             slope: Double, offset: Double,
             profile: IngestProfile,
-            checkpointDir: Option[String]): Handle = {
+            checkpointDir: Option[String]): Handle =
+    startWith(raw, target, profile, checkpointDir)(
+      CurrentValuesSink.writer(_, target, slope, offset, profile.trigger))
+
+  /** The body of [[start]] and [[startScaled]], which differ only in the
+    * value writer `values` wraps around the quality-gated stream.
+    */
+  private def startWith(raw: DataFrame, target: UpsertTarget, profile: IngestProfile,
+                        checkpointDir: Option[String])(
+      values: DataFrame => DataStreamWriter[Row]): Handle = {
     LocalCheckpointFs.install(raw.sparkSession)
-    val trigger = profile.trigger
     val g = gated(raw, profile.watermarkDelay)
 
     // value path: only good values reach the table (F1)
-    val valueWriter = CurrentValuesSink
-      .writer(Gates.qualityGate(g), target, slope, offset, trigger)
-      .queryName("graft-values")
+    val valueWriter = values(Gates.qualityGate(g)).queryName("graft-values")
     val valueQuery = checkpointDir
       .map(d => valueWriter.option("checkpointLocation", s"$d/values"))
       .getOrElse(valueWriter).start()
 
-    val livenessQuery = livenessWriter(g, target, trigger, checkpointDir).start()
+    val livenessQuery = livenessWriter(g, target, profile.trigger, checkpointDir).start()
     Handle(valueQuery, livenessQuery)
   }
 
@@ -124,18 +129,9 @@ object IngestPipeline {
     */
   def startScaled(raw: DataFrame, target: UpsertTarget, scaling: DataFrame,
                   trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                  checkpointDir: Option[String] = None): Handle = {
-    LocalCheckpointFs.install(raw.sparkSession)
-    val g = gated(raw)
-    val valueWriter = CurrentValuesSink
-      .writerScaled(Gates.qualityGate(g), target, scaling, trigger)
-      .queryName("graft-values")
-    val valueQuery = checkpointDir
-      .map(d => valueWriter.option("checkpointLocation", s"$d/values"))
-      .getOrElse(valueWriter).start()
-    val livenessQuery = livenessWriter(g, target, trigger, checkpointDir).start()
-    Handle(valueQuery, livenessQuery)
-  }
+                  checkpointDir: Option[String] = None): Handle =
+    startWith(raw, target, IngestProfile.Default.copy(trigger = trigger), checkpointDir)(
+      CurrentValuesSink.writerScaled(_, target, scaling, trigger))
 
   /** K4/T1 — the heartbeat as its own triggered query (reference: every
     * 12th 5 s tick, `Services/OpcSubscribeService.cs:299-301`): each
@@ -196,19 +192,5 @@ object IngestPipeline {
           (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
       }
       .queryName("graft-watchdog").start()
-  }
-
-  /** Convenience: open the simulated DataSource V2 source and run the full
-    * pipeline against it (the shape a production OPC UA connector plugs
-    * into).
-    */
-  def startFromSource(spark: SparkSession, target: UpsertTarget,
-                      nDevices: Int = 5, nMeasures: Int = 2): Handle = {
-    val raw = spark.readStream
-      .format(classOf[MeasureSourceProvider].getName)
-      .option("nDevices", nDevices).option("nMeasures", nMeasures)
-      .option("numPartitions", 2)
-      .load()
-    start(raw, target)
   }
 }

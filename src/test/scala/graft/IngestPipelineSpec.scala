@@ -175,7 +175,12 @@ class IngestPipelineSpec extends SparkSpec {
 
   test("DataSource V2 pipeline: simulated source feeds both paths to the target") {
     val target = new InMemoryTarget
-    val handle = IngestPipeline.startFromSource(spark, target, nDevices = 3, nMeasures = 2)
+    val raw = spark.readStream
+      .format(classOf[graft.sources.MeasureSourceProvider].getName)
+      .option("nDevices", 3).option("nMeasures", 2)
+      .option("numPartitions", 2)
+      .load()
+    val handle = IngestPipeline.start(raw, target)
     try {
       val deadline = System.currentTimeMillis() + 60000
       def valueRows = target.snapshot.count(_.measure_name != CurrentValues.OnlineMeasure)

@@ -19,7 +19,7 @@ import graft.streaming.CurrentValuesSink.ModRow
   * through [[PgWire]], the hand-written v3 wire-protocol client. Server
   * lifecycle (initdb trust-auth into a temp dir, free port, immediate
   * stop + delete) lives in [[graft.control.PgEphemeral]], shared with
-  * the soak's `SPARK_GRAFT_SOAK_DB=pg` mode. When the sandbox lacks
+  * the harness mains' [[Harness.withModvalues]] fixture. When the sandbox lacks
   * the Postgres binaries (or a non-root user to run them as — postgres
   * refuses root), every test cancels with the reason rather than
   * failing: the Derby leg (ControlPlaneJdbcSpec/JdbcDerbySpec) stays

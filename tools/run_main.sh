@@ -2,7 +2,8 @@
 # Run a graft main with plain java (no sbt lock): tools/run_main.sh <MainClass> [args...]
 # Env knobs pass through (SPARK_GRAFT_*, SPARK_DRIVER_MEM). Mirrors build.sbt javaOptions.
 set -euo pipefail
-CLASSES=/root/repo/target/scala-2.13/classes
+# the classes of the checkout this script lives in, wherever it is run from
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 MEM="${SPARK_DRIVER_MEM:-8g}"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
