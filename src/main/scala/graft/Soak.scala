@@ -78,7 +78,13 @@ object Soak {
       val slot = i % perTick
       val dev = (slot / nMeasures).toInt
       val m = slot % nMeasures
-      val k = (i * 2654435761L) % 1000
+      // SplitMix64's finaliser over the sequence number: the bad 10% moves
+      // between keys from tick to tick. A multiplicative hash alone keeps
+      // i mod 10, i.e. the slot, and always marks the same keys bad.
+      var z = i + 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      val k = java.lang.Long.remainderUnsigned(z ^ (z >>> 31), 1000L)
       val ok = k % 10 != 0 && dev >= badBelow
       (s"$prefix$dev", s"m$m", (k % 997).toDouble / 10.0,
         startMicros + tick * intervalMicros, ok)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, OutputStream}
 import java.net.{ServerSocket, Socket}
 import java.util.concurrent.CopyOnWriteArrayList
 import scala.jdk.CollectionConverters._
@@ -12,8 +12,8 @@ import OpcuaFraming._
   * `Helpers/OpcuaHelperFunctions.cs:72-136`,
   * `Services/OpcSubscribeService.cs:848-957`) down to the wire format:
   * frames are OPC UA Part 6 binary ([[OpcuaFraming]]) — HEL/ACK limit
-  * negotiation, the OPN/CLO OpenSecureChannel lifecycle (SecurityPolicy
-  * None; every MSG chunk carries the issued channel/token ids),
+  * negotiation, the OPN/CLO OpenSecureChannel lifecycle (every MSG chunk
+  * carries the issued channel/token ids),
   * size-prefixed little-endian chunked MSG conversation with sequence
   * discipline, ERR frames — over real TCP, driven end-to-end by
   * FeedTransportSpec; the Part 4 session/Read/subscription services ride
@@ -95,9 +95,9 @@ object FeedTransport {
         val clientSeq = new SeqState // chunks the client sends
         val serverSeq = new SeqState // chunks we send
         // ---- secure channel: the OPN's asymmetric security header names
-        // the policy — SecurityPolicy None (plaintext chunks) or, when the
-        // server holds an identity, Basic256Sha256 (Sign / SignAndEncrypt,
-        // [[OpcuaSecure]])
+        // the policy — SecurityPolicy None or, when the server holds an
+        // identity, Basic256Sha256 (Sign / SignAndEncrypt). This pick is
+        // the only place the server looks at the policy.
         val (opnTpe, opnFin, opnBody) = readFrame(in, neg.receiveBufferSize)
         if (opnTpe == "ERR") throw decodeError(opnBody)
         if (opnTpe != "OPN" || opnFin != 'F') {
@@ -105,20 +105,24 @@ object FeedTransport {
           return
         }
         val policyUri = { val pr = new BufReader(opnBody); pr.u32(); pr.str() }
-        if (policyUri == OpcuaCrypto.Basic256Sha256Uri) {
-          identity match {
-            case Some(ident) => serveSecured(in, out, neg, clientSeq, serverSeq, opnBody, ident)
-            case None => sendErr(out, BadSecurityChecksFailed, "secured endpoint not configured")
+        val offered: ChannelPolicy =
+          if (policyUri != OpcuaCrypto.Basic256Sha256Uri) NonePolicy // refuses other URIs
+          else identity match {
+            case Some(ident) => OpcuaSecure.Basic256Sha256(0L, ident, null)
+            case None =>
+              sendErr(out, BadSecurityChecksFailed, "secured endpoint not configured")
+              return
           }
-          return
-        }
-        val (opnRid, opnReq) = parseOpenRequest(opnBody, clientSeq)
-        if (opnReq.securityMode != SecurityModeNone || opnReq.requestType != RequestTypeIssue) {
+        val (opnRid, opnReq) = parseOpenRequest(opnBody, clientSeq, offered)
+        if (opnReq.requestType != RequestTypeIssue || !offered.accepts(opnReq.securityMode)) {
           sendErr(out, BadSecurityChecksFailed,
-            s"only Issue supported, policy None or Basic256Sha256 " +
+            s"expected Issue in a mode of $policyUri " +
               s"(got ${opnReq.requestType}/${opnReq.securityMode})")
           return
         }
+        // the Issue fixes the mode and the client certificate its
+        // renewals must carry
+        val policy = offered.bind(opnReq.securityMode, opnReq.senderCertDer)
         var token = ChannelToken(nextChannelId.getAndIncrement(), tokenId = 1L,
           createdAtMillis = clock(), lifetimeMs = math.max(minTokenLifetimeMs, opnReq.requestedLifetimeMs))
         // after a renew the PREVIOUS token stays honoured until its own
@@ -132,7 +136,11 @@ object FeedTransport {
           (t == token.tokenId &&
             clock() < token.createdAtMillis + token.lifetimeMs + token.lifetimeMs / 4) ||
             prevToken.exists { case (pt, exp) => t == pt && clock() < exp }
-        writeOpenResponse(out, serverSeq, opnRid, clock(), token)
+        // seals per live token id: chunks the client still sends under the
+        // previous token only verify under the keys of ITS nonces
+        val issueNonce = policy.newNonce()
+        var keyring = Map(token.tokenId -> policy.seals(opnReq.clientNonce, issueNonce))
+        writeOpenResponse(out, serverSeq, opnRid, clock(), token, policy, issueNonce)
         // ---- conversation (symmetric headers carry the issued ids now).
         // Two body addressings share the channel: the bulk-read extension
         // ops (small leading u32 — LATEST/GET/RANGE, the replayable-pull
@@ -142,15 +150,15 @@ object FeedTransport {
         val services = new OpcuaSession.SessionServices(feed, clock, identity,
           users, allowAnonymous)
         while (running) {
-          val (rid, body) =
-            readConversation(in, clientSeq, neg, token.channelId, tokenOk, allowOpn = true)
+          val (rid, body) = readConversation(in, clientSeq, neg, token.channelId,
+            t => if (tokenOk(t)) keyring.get(t).map(_.client) else None, allowOpn = true)
           if (rid == -1L) {
             // mid-conversation OPN: token RENEWAL on the live channel
-            val (orid, req) = parseOpenRequest(body, clientSeq)
-            if (req.requestType != RequestTypeRenew || req.securityMode != SecurityModeNone ||
+            val (orid, req) = parseOpenRequest(body, clientSeq, policy)
+            if (req.requestType != RequestTypeRenew || !policy.accepts(req.securityMode) ||
                 req.channelId != token.channelId) {
               sendErr(out, BadSecurityChecksFailed,
-                s"expected Renew/None on channel ${token.channelId}, " +
+                s"expected Renew/${policy.mode} on channel ${token.channelId}, " +
                   s"got ${req.requestType}/${req.securityMode} on ${req.channelId}")
               return
             }
@@ -158,10 +166,13 @@ object FeedTransport {
             token = ChannelToken(token.channelId, token.tokenId + 1,
               createdAtMillis = clock(),
               lifetimeMs = math.max(minTokenLifetimeMs, req.requestedLifetimeMs))
-            writeOpenResponse(out, serverSeq, orid, clock(), token)
+            val serverNonce = policy.newNonce()
+            keyring = keyring.filter { case (t, _) => prevToken.exists(_._1 == t) } +
+              (token.tokenId -> policy.seals(req.clientNonce, serverNonce))
+            writeOpenResponse(out, serverSeq, orid, clock(), token, policy, serverNonce)
           } else {
             val mw = new MessageWriter(out, serverSeq, rid, neg.sendBufferSize,
-              neg.maxChunkCount, token.channelId, token.tokenId)
+              neg.maxChunkCount, token.channelId, token.tokenId, keyring(token.tokenId).server)
             if (!dispatch(services, body, mw, out)) return
           }
         }
@@ -171,10 +182,9 @@ object FeedTransport {
       } finally { live.remove(sock); try sock.close() catch { case _: Exception => () } }
     }
 
-    /** Answer one reassembled request body through `mw` — mode-blind: the
-      * sink is a plaintext [[MessageWriter]] or a
-      * [[OpcuaSecure.SecureMessageWriter]]. Returns false when the
-      * connection must die (ERR already sent).
+    /** Answer one reassembled request body through `mw`, the channel's
+      * writer under its live token. Returns false when the connection must
+      * die (ERR already sent).
       */
     private def dispatch(services: OpcuaSession.SessionServices, body: Array[Byte],
                          mw: ChunkSink, out: OutputStream): Boolean = {
@@ -223,82 +233,6 @@ object FeedTransport {
               sendErr(out, BadDecodingError, s"undecodable request body: ${e.getMessage}")
               false
           }
-      }
-    }
-
-    /** The Basic256Sha256 conversation (Sign or SignAndEncrypt — the
-      * client's OPN picks): secured OPN Issue → nonce exchange → P_SHA256
-      * key derivation → secured MSG chunks both ways, with secured
-      * OPN(Renew) deriving fresh keys per token and the previous token's
-      * keys honoured through the §6.7.4 grace window.
-      */
-    private def serveSecured(in: InputStream, out: OutputStream, neg: Limits,
-                             clientSeq: SeqState, serverSeq: SeqState,
-                             opnBody: Array[Byte], ident: OpcuaCrypto.Identity): Unit = {
-      import OpcuaCrypto._
-      import OpcuaSecure._
-      val opn = readSecuredOpnChunk(opnBody, clientSeq, ident)
-      val (handle, req, clientNonce) = parseSecuredOpenRequest(opn)
-      if (req.requestType != RequestTypeIssue ||
-          (req.securityMode != SecurityModeSign && req.securityMode != SecurityModeSignAndEncrypt)) {
-        sendErr(out, BadSecurityChecksFailed,
-          s"secured endpoint expects Issue with Sign/SignAndEncrypt " +
-            s"(got ${req.requestType}/${req.securityMode})")
-        return
-      }
-      val mode = req.securityMode
-      val clientCert = opn.senderCertDer // trust-on-first-use; pinned for renewals
-      var token = ChannelToken(nextChannelId.getAndIncrement(), tokenId = 1L,
-        createdAtMillis = clock(),
-        lifetimeMs = math.max(minTokenLifetimeMs, req.requestedLifetimeMs))
-      val issueNonce = newNonce()
-      writeSecuredOpenResponse(out, serverSeq, handle, clock(), token,
-        ident, clientCert, issueNonce)
-      var keys = deriveChannelKeys(clientNonce, issueNonce)
-      // keys per live token id — the client may still send under the
-      // previous token during its grace window, and those chunks only
-      // verify under the keys derived with ITS nonces
-      var keyring = Map(token.tokenId -> keys)
-      var prevToken: Option[(Long, Long)] = None
-      def tokenOk(t: Long): Boolean =
-        (t == token.tokenId &&
-          clock() < token.createdAtMillis + token.lifetimeMs + token.lifetimeMs / 4) ||
-          prevToken.exists { case (pt, exp) => t == pt && clock() < exp }
-      def clientKeysFor(t: Long): Option[DirectionKeys] =
-        if (tokenOk(t)) keyring.get(t).map(_.clientKeys) else None
-      val services = new OpcuaSession.SessionServices(feed, clock, Some(ident),
-        users, allowAnonymous)
-      while (running) {
-        val (rid, body) =
-          readSecureConversation(in, clientSeq, neg, token.channelId, mode,
-            clientKeysFor, allowOpn = true)
-        if (rid == -1L) {
-          // secured renew: fresh nonces, fresh keys under the new token
-          val ropn = readSecuredOpnChunk(body, clientSeq, ident)
-          val (rhandle, rreq, rnonce) = parseSecuredOpenRequest(ropn)
-          if (rreq.requestType != RequestTypeRenew || rreq.securityMode != mode ||
-              rreq.channelId != token.channelId ||
-              !java.util.Arrays.equals(ropn.senderCertDer, clientCert)) {
-            sendErr(out, BadSecurityChecksFailed,
-              s"expected Renew/$mode on channel ${token.channelId} under the issuing certificate")
-            return
-          }
-          prevToken = Some((token.tokenId, token.createdAtMillis + token.lifetimeMs))
-          token = ChannelToken(token.channelId, token.tokenId + 1,
-            createdAtMillis = clock(),
-            lifetimeMs = math.max(minTokenLifetimeMs, rreq.requestedLifetimeMs))
-          val serverNonce = newNonce()
-          keys = deriveChannelKeys(rnonce, serverNonce)
-          keyring = (keyring + (token.tokenId -> keys)).filter {
-            case (t, _) => t == token.tokenId || prevToken.exists(_._1 == t)
-          }
-          writeSecuredOpenResponse(out, serverSeq, rhandle, clock(), token,
-            ident, clientCert, serverNonce)
-        } else {
-          val mw = new SecureMessageWriter(out, serverSeq, rid, neg.sendBufferSize,
-            neg.maxChunkCount, token.channelId, token.tokenId, mode, keys.serverKeys)
-          if (!dispatch(services, body, mw, out)) return
-        }
       }
     }
 
@@ -369,14 +303,7 @@ object FeedTransport {
 
     private val backoff = new RetryPolicy.Backoff
     @transient private var sock: Socket = _
-    @transient private var in: InputStream = _
-    @transient private var out: OutputStream = _
-    @transient private var negotiated: Limits = _
-    @transient private var channel: ChannelToken = _
-    @transient private var sendSeq: SeqState = _
-    @transient private var recvSeq: SeqState = _
-    @transient private var sec: Option[OpcuaSecure.SecureClientChannel] = None
-    private var requestId = 0L
+    @transient private var conv: ClientConversation = _
 
     /** Delays observed by `sleeper` (exposed for the spec's assertions). */
     val delays = new CopyOnWriteArrayList[Double]()
@@ -385,40 +312,21 @@ object FeedTransport {
 
     private def teardown(): Unit = {
       if (sock != null) { try sock.close() catch { case _: Exception => () }; sock = null }
-      sec = None
+      conv = null
     }
 
     private def connect(): Unit = {
       sock = new Socket()
-      sock.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
-      sock.setSoTimeout(timeoutMs)
-      in = new BufferedInputStream(sock.getInputStream, 1 << 16)
-      out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
-      // HEL/ACK + OpenSecureChannel(Issue, None) — shared client half
-      // ([[OpcuaFraming.openClientChannel]]). An ERR on either leg is a
-      // handshake rejection: same bounded-retry path as a refused TCP
-      // connect (the server may be restarting), not the request-level
-      // fail-fast an in-conversation ERR gets.
-      val ch =
-        try security match {
-          case Some(setup) =>
-            val sc = OpcuaSecure.openSecureClientChannel(in, out, limits,
-              s"opc.tcp://$host:$port/graft", System.currentTimeMillis(), setup,
-              requestedLifetimeMs)
-            sec = Some(sc)
-            sc.channel
-          case None =>
-            openClientChannel(in, out, limits, s"opc.tcp://$host:$port/graft",
-              System.currentTimeMillis(), requestedLifetimeMs)
-        }
+      // HEL/ACK + OpenSecureChannel(Issue) — the shared client half. An
+      // ERR on either leg is a handshake rejection: same bounded-retry
+      // path as a refused TCP connect (the server may be restarting), not
+      // the request-level fail-fast an in-conversation ERR gets.
+      conv =
+        try ClientConversation.connect(sock, host, port, timeoutMs, limits,
+          OpcuaSecure.SecuritySetup.policyOf(security), requestedLifetimeMs)
         catch { case e: OpcuaError =>
           throw new java.io.IOException(s"handshake rejected: ${e.getMessage}")
         }
-      negotiated = ch.negotiated
-      channel = ch.token
-      sendSeq = ch.sendSeq
-      recvSeq = ch.recvSeq
-      requestId = 1L // the OPN consumed RequestId 1
       backoff.tcpDropped() // connected: reset the backoff legs
     }
 
@@ -429,7 +337,7 @@ object FeedTransport {
       var attempt = 0
       while (true) {
         try {
-          if (sock == null) connect()
+          if (conv == null) connect()
           return body
         } catch {
           case e: java.io.IOException =>
@@ -445,63 +353,19 @@ object FeedTransport {
       throw new IllegalStateException("unreachable")
     }
 
-    /** One MSG round-trip: encode the request, reassemble the response,
-      * correlate by RequestId. An ERR frame tears the connection down
-      * (the spec makes ERR fatal) and fails fast as
-      * [[FeedProtocolException]] — no backoff, no retry.
+    /** One round trip on the shared conversation (which renews the token
+      * when due and correlates the response by RequestId). An ERR frame
+      * tears the connection down (the spec makes ERR fatal) and fails fast
+      * as [[FeedProtocolException]] — no backoff, no retry.
       */
     private def call[T](encode: ChunkSink => Unit)(decode: BufReader => T): T =
       withSession {
-        // renew the security token at 75% of its lifetime — between
-        // requests, so the single-in-flight discipline holds. An ERR
-        // answer surfaces as OpcuaError (a RuntimeException): wrap it
-        // into IOException so a renew failure takes the same
-        // teardown+reconnect path as any other dead connection — exactly
-        // the conversion connect() applies to a rejected handshake.
-        if (shouldRenew(channel, System.currentTimeMillis())) {
-          requestId += 1
-          try sec match {
-            case Some(sc) =>
-              val renewed = OpcuaSecure.renewSecureChannel(in, out, sc, requestId,
-                System.currentTimeMillis(), requestedLifetimeMs)
-              sec = Some(renewed)
-              channel = renewed.channel.token
-            case None =>
-              channel = renewChannel(in, out,
-                ClientChannel(negotiated, channel, sendSeq, recvSeq),
-                requestId, System.currentTimeMillis(), requestedLifetimeMs).token
-          }
-          catch { case e: OpcuaError =>
-            throw new java.io.IOException(s"token renewal rejected: ${e.getMessage}")
-          }
-        }
-        requestId += 1
-        val mw: ChunkSink = sec match {
-          case Some(sc) =>
-            new OpcuaSecure.SecureMessageWriter(out, sendSeq, requestId,
-              negotiated.receiveBufferSize, negotiated.maxChunkCount,
-              channel.channelId, channel.tokenId, sc.setup.mode, sc.keys.clientKeys)
-          case None =>
-            new MessageWriter(out, sendSeq, requestId,
-              negotiated.receiveBufferSize, negotiated.maxChunkCount,
-              channel.channelId, channel.tokenId)
-        }
-        encode(mw)
-        mw.finish()
-        val readLimits = negotiated.copy(receiveBufferSize = negotiated.sendBufferSize)
-        val before = recvSeq.next
-        val (rid, body) =
-          try sec match {
-            case Some(sc) =>
-              OpcuaSecure.readSecureConversation(in, recvSeq, readLimits,
-                channel.channelId, sc.setup.mode, sc.serverKeysFor, allowOpn = false)
-            case None =>
-              readMessage(in, recvSeq, readLimits, channel.channelId, channel.tokenId)
-          }
+        val c = conv
+        val before = c.chunksRead
+        val body =
+          try c.call(encode)
           catch { case e: OpcuaError => teardown(); throw new FeedProtocolException(e.getMessage) }
-        chunksRead += recvSeq.next - before
-        if (rid != requestId)
-          throw new FramingViolation(s"response for request $rid, expected $requestId")
+        chunksRead += c.chunksRead - before
         decode(new BufReader(body))
       }
 
@@ -525,12 +389,7 @@ object FeedTransport {
     override def close(): Unit = {
       // best-effort CLO (the spec's orderly shutdown); failures fall back
       // to the plain TCP close
-      if (sock != null && channel != null) {
-        try {
-          requestId += 1
-          writeCloseRequest(out, channel, sendSeq, requestId, System.currentTimeMillis())
-        } catch { case _: Exception => () }
-      }
+      if (conv != null) conv.close()
       teardown()
     }
   }

@@ -22,9 +22,8 @@ import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
   *  - KeyDerivation: P_SHA256 (the TLS 1.2 PRF expansion, RFC 5246 §5)
   *  - Nonces: 32 bytes (SecureChannelNonceLength for this policy)
   *
-  * Everything here is pure byte-level material; the chunk-layout halves
-  * (asymmetric OPN securing, symmetric MSG securing) live in
-  * [[OpcuaSecure]] next to the framing layer they extend.
+  * Everything here is pure byte-level material; the chunk layouts that
+  * use it (the OPN wrap and the MSG/CLO seal) live in [[OpcuaSecure]].
   */
 object OpcuaCrypto {
 
@@ -269,10 +268,16 @@ object OpcuaCrypto {
   // ---------------------------------------------------------- symmetric
 
   def hmacSha256(key: Array[Byte], data: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    val mac = Mac.getInstance("HmacSHA256")
-    mac.init(new SecretKeySpec(key, "HmacSHA256"))
+    val mac = hmac(key)
     mac.update(data, off, len)
     mac.doFinal()
+  }
+
+  /** An HMAC-SHA256 keyed with `key`, for a MAC over several pieces. */
+  def hmac(key: Array[Byte]): Mac = {
+    val mac = Mac.getInstance("HmacSHA256")
+    mac.init(new SecretKeySpec(key, "HmacSHA256"))
+    mac
   }
 
   /** AES-256-CBC without transport padding — the caller guarantees

@@ -24,21 +24,24 @@ import java.nio.charset.StandardCharsets
   *    Double, String = Int32 byte length (−1 = null) + UTF-8 bytes,
   *    Boolean = single byte.
   *
-  *  - §6.7 OPN/CLO secure-channel lifecycle with SecurityPolicy None:
-  *    OpenSecureChannel(Issue) request/response — asymmetric security
-  *    header (policy URI, null certificate/thumbprint), the Part 4
+  *  - §6.7 OPN/CLO secure-channel lifecycle: OpenSecureChannel(Issue /
+  *    Renew) request/response — asymmetric security header, the Part 4
   *    Request/ResponseHeader structs, four-byte ns-0 NodeIds of the
   *    binary-encoded service types (i=446/449/452), FILETIME DateTimes —
   *    issuing the (SecureChannelId, TokenId) every subsequent MSG chunk
   *    carries; CLO for orderly shutdown.
   *
-  * The Part 4 service layer above this channel — sessions, Read,
-  * subscriptions with monitored items and Publish — lives in
-  * [[OpcuaSession]]. This object covers SecurityPolicy None (plaintext
-  * chunks); the Sign / SignAndEncrypt modes of Basic256Sha256 —
-  * certificates, nonce exchange, P_SHA256 key derivation, chunk
-  * signing/encryption — live in [[OpcuaCrypto]] + [[OpcuaSecure]] and
-  * plug into the same frame/sequence discipline defined here.
+  * One channel serves every security mode. The security policy is a
+  * value the channel holds ([[ChannelPolicy]]): it wraps OPN chunks,
+  * sizes the nonces and seals MSG/CLO chunks ([[ChunkSeal]]).
+  * [[NonePolicy]] is SecurityPolicy None — null certificate, null nonce,
+  * plaintext chunks; [[OpcuaSecure.Basic256Sha256]] is the Sign /
+  * SignAndEncrypt policy, with its primitives in [[OpcuaCrypto]]. The
+  * OPN codec, the chunk writer and reader, the client channel and the
+  * server's token lifecycle ([[FeedTransport.FeedServer]]) are written
+  * once, against the policy. The Part 4 service layer above the channel
+  * — sessions, Read, subscriptions with monitored items and Publish —
+  * lives in [[OpcuaSession]].
   */
 object OpcuaFraming {
 
@@ -262,7 +265,7 @@ object OpcuaFraming {
       maxChunkCount = minLimit(server.maxChunkCount, hello.maxChunkCount))
   }
 
-  // ------------------------------------- OPN / CLO (SecurityPolicy None)
+  // ------------------------------------------------------------ OPN / CLO
 
   val SecurityPolicyNoneUri = "http://opcfoundation.org/UA/SecurityPolicy#None"
   /** MessageSecurityMode enumeration (Part 4): None = 1. */
@@ -287,6 +290,14 @@ object OpcuaFraming {
     case m => throw new FramingViolation(f"unsupported NodeId encoding 0x$m%02x")
   }
 
+  /** ByteString (Part 6 §5.2.2.7): Int32 length, −1 = null. */
+  private[sources] def writeByteString(w: BufWriter, b: Array[Byte]): BufWriter =
+    if (b == null) w.i32(-1) else w.i32(b.length).raw(b)
+  private[sources] def readByteString(r: BufReader): Array[Byte] = {
+    val len = r.i32()
+    if (len < 0) null else r.bytes(len) // bounded by the body before allocating
+  }
+
   /** Common RequestHeader (Part 4 §7.33): null auth token, timestamp,
     * handle, no diagnostics, null audit id, timeout, null extension.
     */
@@ -306,28 +317,139 @@ object OpcuaFraming {
     handle
   }
 
+  /** An OpenSecureChannelRequest as received: the struct's fields, the
+    * frame's SecureChannelId and the sender certificate of the asymmetric
+    * header (null under SecurityPolicy None, as is the nonce).
+    */
   final case class OpenSecureChannelRequest(requestHandle: Long, clientProtocolVersion: Long,
                                             requestType: Long, securityMode: Long,
                                             requestedLifetimeMs: Long,
-                                            channelId: Long = 0L)
+                                            channelId: Long, clientNonce: Array[Byte],
+                                            senderCertDer: Array[Byte])
   final case class ChannelToken(channelId: Long, tokenId: Long,
                                 createdAtMillis: Long, lifetimeMs: Long)
 
-  /** The asymmetric security header an unencrypted OPN carries (Part 6
-    * §6.7.2.3): policy URI string, null sender certificate, null receiver
-    * thumbprint. With SecurityPolicy None the chunk body is plaintext and
-    * there is no signature — which is exactly why this layer is
-    * implementable without a crypto stack; Sign/SignAndEncrypt modes are
-    * the remaining out-of-scope surface.
+  /** Check the sequence header (Part 6 §6.7.2.4) at `r`'s cursor against
+    * `seq` and return its RequestId.
     */
-  private def asymHeader(w: BufWriter): BufWriter =
-    w.str(SecurityPolicyNoneUri).i32(-1).i32(-1)
-  private def readAsymHeader(r: BufReader): String = {
-    val uri = r.str()
-    val certLen = r.i32(); if (certLen > 0) throw new FramingViolation("unexpected certificate on a None-policy channel")
-    val thumbLen = r.i32(); if (thumbLen > 0) throw new FramingViolation("unexpected thumbprint on a None-policy channel")
-    uri
+  private[sources] def readSequenceHeader(r: BufReader, seq: SeqState): Long = {
+    val sn = r.u32()
+    if (sn != seq.next) throw new FramingViolation(s"sequence number $sn, expected ${seq.next}")
+    seq.next += 1
+    r.u32()
   }
+
+  private[sources] def putU32(b: Array[Byte], off: Int, v: Long): Unit = {
+    b(off) = v.toByte; b(off + 1) = (v >>> 8).toByte
+    b(off + 2) = (v >>> 16).toByte; b(off + 3) = (v >>> 24).toByte
+  }
+
+  // ------------------------------------------------------ security policy
+
+  /** One unwrapped OPN chunk: the frame's SecureChannelId and RequestId,
+    * the sender certificate (null under SecurityPolicy None) and a reader
+    * at the OpenSecureChannel struct. The sequence number is checked.
+    */
+  final case class OpnChunk(channelId: Long, requestId: Long, senderCertDer: Array[Byte],
+                            payload: BufReader)
+
+  /** The security policy of one secure channel (Part 6 §6.7): how its OPN
+    * chunks are wrapped, which nonces its OPNs exchange, and how its
+    * MSG/CLO chunks are sealed under the keys those nonces give. This is
+    * all that differs between the policies; the OPN codec, the chunk
+    * writer and reader and both ends' token lifecycles take it as a value.
+    */
+  trait ChannelPolicy {
+    /** The MessageSecurityMode (Part 4 §7.15) the channel runs. */
+    def mode: Long
+    /** Whether an OPN asking for `requested` may open or renew the channel. */
+    def accepts(requested: Long): Boolean = requested == mode
+    /** The policy once an Issue has fixed the mode and named the peer's
+      * certificate, which later OPNs must carry.
+      */
+    def bind(mode: Long, peerCertDer: Array[Byte]): ChannelPolicy = this
+    /** A fresh OPN nonce; null under None. */
+    def newNonce(): Array[Byte]
+    /** Refuse an OPN nonce the policy cannot use; `side` names its sender. */
+    def checkNonce(nonce: Array[Byte], side: String): Unit
+    /** Write one OPN frame around the struct `payload` encodes. */
+    def writeOpn(out: OutputStream, seq: SeqState, channelId: Long, requestId: Long,
+                 payload: BufWriter => Unit): Unit
+    /** Unwrap one OPN frame body (the 8-byte header already read). */
+    def readOpn(frameBody: Array[Byte], seq: SeqState): OpnChunk
+    /** The chunk seals of one token, from the nonces its OPN exchanged. */
+    def seals(clientNonce: Array[Byte], serverNonce: Array[Byte]): ChannelSeals
+  }
+
+  /** How one direction's MSG/CLO chunks are secured under one token
+    * (Part 6 §6.7.2). [[MessageWriter]] assembles a chunk in one buffer —
+    * the 24 header bytes, then the body — and `seal` completes and sends
+    * it; [[readConversation]] hands each chunk's frame body to `unseal`.
+    */
+  trait ChunkSeal {
+    /** The most bytes `seal` appends after a chunk's body. */
+    def overhead: Int
+    /** Set the MessageSize of the chunk in `chunk(0, end)`, secure it and
+      * write it; `chunk` has room for `overhead` more bytes.
+      */
+    def seal(out: OutputStream, chunk: Array[Byte], end: Int): Unit
+    /** Check one chunk's frame body and leave its plaintext in place;
+      * returns the offset where the body ends.
+      */
+    def unseal(tpe: String, fin: Char, frame: Array[Byte]): Int
+  }
+
+  /** Plaintext chunks: sent as assembled, accepted as read. */
+  object PlainChunks extends ChunkSeal {
+    val overhead = 0
+    def seal(out: OutputStream, chunk: Array[Byte], end: Int): Unit = {
+      putU32(chunk, 4, end)
+      out.write(chunk, 0, end)
+    }
+    def unseal(tpe: String, fin: Char, frame: Array[Byte]): Int = frame.length
+  }
+
+  /** One token's seals: the client sends under `client`, the server under
+    * `server`.
+    */
+  final case class ChannelSeals(client: ChunkSeal, server: ChunkSeal)
+
+  /** SecurityPolicy None: the asymmetric header names the policy with a
+    * null certificate and thumbprint, nonces are null and every chunk is
+    * plaintext.
+    */
+  object NonePolicy extends ChannelPolicy {
+    val mode: Long = SecurityModeNone
+    private val plain = ChannelSeals(PlainChunks, PlainChunks)
+    def newNonce(): Array[Byte] = null
+    def checkNonce(nonce: Array[Byte], side: String): Unit =
+      if (nonce != null && nonce.length > 0)
+        throw new FramingViolation(s"unexpected $side nonce on a None-policy channel")
+    def writeOpn(out: OutputStream, seq: SeqState, channelId: Long, requestId: Long,
+                 payload: BufWriter => Unit): Unit = {
+      val w = new BufWriter(160)
+      w.u32(channelId) // 0 until issued; the live channel id on Renew
+      w.str(SecurityPolicyNoneUri).i32(-1).i32(-1)
+      w.u32(seq.next); seq.next += 1
+      w.u32(requestId)
+      payload(w)
+      writeFrame(out, "OPN", 'F', w.result())
+      out.flush()
+    }
+    def readOpn(frameBody: Array[Byte], seq: SeqState): OpnChunk = {
+      val r = new BufReader(frameBody)
+      val channelId = r.u32()
+      val uri = r.str()
+      if (r.i32() > 0) throw new FramingViolation("unexpected certificate on a None-policy channel")
+      if (r.i32() > 0) throw new FramingViolation("unexpected thumbprint on a None-policy channel")
+      if (uri != SecurityPolicyNoneUri)
+        throw new OpcuaError(BadSecurityChecksFailed, s"unsupported policy $uri")
+      OpnChunk(channelId, readSequenceHeader(r, seq), null, r)
+    }
+    def seals(clientNonce: Array[Byte], serverNonce: Array[Byte]): ChannelSeals = plain
+  }
+
+  // ------------------------------------------------------------ OPN codec
 
   /** OPN request frame — single chunk. Issue rides SecureChannelId 0 (no
     * channel yet); a Renew rides the ESTABLISHED channel id and continues
@@ -337,94 +459,74 @@ object OpcuaFraming {
   def writeOpenRequest(out: OutputStream, seq: SeqState, requestId: Long,
                        epochMillis: Long, requestedLifetimeMs: Long,
                        channelId: Long = 0L,
-                       requestType: Long = RequestTypeIssue): Unit = {
-    val w = new BufWriter(160)
-    w.u32(channelId) // 0 until issued; the live channel id on Renew
-    asymHeader(w)
-    w.u32(seq.next); seq.next += 1
-    w.u32(requestId)
-    nodeId(w, OpenSecureChannelRequestId)
-    requestHeader(w, epochMillis, requestId)
-    w.u32(ProtocolVersion) // ClientProtocolVersion
-    w.u32(requestType)
-    w.u32(SecurityModeNone)
-    w.i32(-1)              // ClientNonce: null ByteString
-    w.u32(requestedLifetimeMs)
-    writeFrame(out, "OPN", 'F', w.result())
-    out.flush()
-  }
+                       requestType: Long = RequestTypeIssue,
+                       policy: ChannelPolicy = NonePolicy,
+                       clientNonce: Array[Byte] = null): Unit =
+    policy.writeOpn(out, seq, channelId, requestId, { w =>
+      nodeId(w, OpenSecureChannelRequestId)
+      requestHeader(w, epochMillis, requestId)
+      w.u32(ProtocolVersion) // ClientProtocolVersion
+      w.u32(requestType)
+      w.u32(policy.mode)
+      writeByteString(w, clientNonce)
+      w.u32(requestedLifetimeMs)
+    })
 
-  def readOpenRequest(in: InputStream, seq: SeqState, maxFrame: Int): (Long, OpenSecureChannelRequest) = {
-    val (tpe, fin, body) = readFrame(in, maxFrame)
-    if (tpe == "ERR") throw decodeError(body)
-    if (tpe != "OPN" || fin != 'F') throw new FramingViolation(s"expected final OPN, got $tpe/$fin")
-    parseOpenRequest(body, seq)
-  }
+  def readOpenRequest(in: InputStream, seq: SeqState, maxFrame: Int,
+                      policy: ChannelPolicy = NonePolicy): (Long, OpenSecureChannelRequest) =
+    parseOpenRequest(readOpnFrame(in, maxFrame), seq, policy)
 
-  /** Parse one already-read OPN frame body (shared by the handshake path
-    * and the mid-conversation Renew path, where the frame arrives through
-    * the MSG read loop). Issue must carry SecureChannelId 0; the caller
-    * validates a Renew's id against the live channel.
+  /** Parse one already-read OPN frame body into (RequestId, request)
+    * (shared by the handshake path and the mid-conversation Renew path,
+    * where the frame arrives through the MSG read loop). Issue must carry
+    * SecureChannelId 0; the caller validates a Renew's id against the
+    * live channel.
     */
-  def parseOpenRequest(body: Array[Byte], seq: SeqState): (Long, OpenSecureChannelRequest) = {
-    val r = new BufReader(body)
-    val frameChannelId = r.u32()
-    val uri = readAsymHeader(r)
-    if (uri != SecurityPolicyNoneUri)
-      throw new OpcuaError(BadSecurityChecksFailed, s"unsupported policy $uri")
-    val sn = r.u32()
-    if (sn != seq.next) throw new FramingViolation(s"sequence number $sn, expected ${seq.next}")
-    seq.next += 1
-    val requestId = r.u32()
+  def parseOpenRequest(body: Array[Byte], seq: SeqState,
+                       policy: ChannelPolicy = NonePolicy): (Long, OpenSecureChannelRequest) = {
+    val opn = policy.readOpn(body, seq)
+    val r = opn.payload
     if (readNodeId(r) != OpenSecureChannelRequestId)
       throw new FramingViolation("OPN body is not an OpenSecureChannelRequest")
     val handle = skipRequestHeader(r)
     val ver = r.u32(); val reqType = r.u32(); val mode = r.u32()
-    val nonceLen = r.i32(); if (nonceLen > 0) throw new FramingViolation("unexpected nonce on a None-policy channel")
+    val nonce = readByteString(r)
+    policy.checkNonce(nonce, "client")
     val lifetime = r.u32()
-    if (reqType == RequestTypeIssue && frameChannelId != 0L)
+    if (reqType == RequestTypeIssue && opn.channelId != 0L)
       throw new FramingViolation("OPN Issue must carry SecureChannelId 0")
-    (requestId, OpenSecureChannelRequest(handle, ver, reqType, mode, lifetime, frameChannelId))
+    (opn.requestId, OpenSecureChannelRequest(handle, ver, reqType, mode, lifetime,
+      opn.channelId, nonce, opn.senderCertDer))
   }
 
   /** OPN response frame: the issued channel security token. */
   def writeOpenResponse(out: OutputStream, seq: SeqState, requestId: Long,
-                        epochMillis: Long, token: ChannelToken): Unit = {
-    val w = new BufWriter(160)
-    w.u32(token.channelId)
-    asymHeader(w)
-    w.u32(seq.next); seq.next += 1
-    w.u32(requestId)
-    nodeId(w, OpenSecureChannelResponseId)
-    // ResponseHeader (Part 4 §7.34): timestamp, handle, Good, no
-    // diagnostics, empty string table, null extension
-    w.i64(toFiletime(epochMillis))
-    w.u32(requestId)
-    w.u32(GoodStatus)
-    w.u8(0x00)               // ServiceDiagnostics: null DiagnosticInfo
-    w.i32(-1)                // StringTable: null array
-    w.u8(0x00).u8(0x00).u8(0x00) // AdditionalHeader
-    w.u32(ProtocolVersion)   // ServerProtocolVersion
-    w.u32(token.channelId)
-    w.u32(token.tokenId)
-    w.i64(toFiletime(token.createdAtMillis))
-    w.u32(token.lifetimeMs)
-    w.i32(-1)                // ServerNonce: null ByteString
-    writeFrame(out, "OPN", 'F', w.result())
-    out.flush()
-  }
+                        epochMillis: Long, token: ChannelToken,
+                        policy: ChannelPolicy = NonePolicy,
+                        serverNonce: Array[Byte] = null): Unit =
+    policy.writeOpn(out, seq, token.channelId, requestId, { w =>
+      nodeId(w, OpenSecureChannelResponseId)
+      // ResponseHeader (Part 4 §7.34): timestamp, handle, Good, no
+      // diagnostics, empty string table, null extension
+      w.i64(toFiletime(epochMillis))
+      w.u32(requestId)
+      w.u32(GoodStatus)
+      w.u8(0x00)               // ServiceDiagnostics: null DiagnosticInfo
+      w.i32(-1)                // StringTable: null array
+      w.u8(0x00).u8(0x00).u8(0x00) // AdditionalHeader
+      w.u32(ProtocolVersion)   // ServerProtocolVersion
+      w.u32(token.channelId)
+      w.u32(token.tokenId)
+      w.i64(toFiletime(token.createdAtMillis))
+      w.u32(token.lifetimeMs)
+      writeByteString(w, serverNonce)
+    })
 
-  def readOpenResponse(in: InputStream, seq: SeqState, maxFrame: Int): ChannelToken = {
-    val (tpe, fin, body) = readFrame(in, maxFrame)
-    if (tpe == "ERR") throw decodeError(body)
-    if (tpe != "OPN" || fin != 'F') throw new FramingViolation(s"expected final OPN, got $tpe/$fin")
-    val r = new BufReader(body)
-    val frameChannel = r.u32()
-    readAsymHeader(r)
-    val sn = r.u32()
-    if (sn != seq.next) throw new FramingViolation(s"sequence number $sn, expected ${seq.next}")
-    seq.next += 1
-    r.u32() // requestId (client correlates by being the only in-flight request)
+  /** Read an OPN response: the issued token and the server nonce. */
+  def readOpenResponse(in: InputStream, seq: SeqState, maxFrame: Int,
+                       policy: ChannelPolicy = NonePolicy): (ChannelToken, Array[Byte]) = {
+    val opn = policy.readOpn(readOpnFrame(in, maxFrame), seq)
+    val r = opn.payload
     if (readNodeId(r) != OpenSecureChannelResponseId)
       throw new FramingViolation("OPN body is not an OpenSecureChannelResponse")
     r.i64() // response timestamp
@@ -435,52 +537,60 @@ object OpcuaFraming {
     r.u32() // server protocol version
     val channelId = r.u32(); val tokenId = r.u32()
     val createdAt = r.i64(); val lifetime = r.u32()
-    r.i32() // server nonce
-    if (channelId != frameChannel)
-      throw new FramingViolation(s"token channel $channelId != frame channel $frameChannel")
-    ChannelToken(channelId, tokenId, createdAt / 10000L - 11644473600000L, lifetime)
+    val nonce = readByteString(r)
+    policy.checkNonce(nonce, "server")
+    if (channelId != opn.channelId)
+      throw new FramingViolation(s"token channel $channelId != frame channel ${opn.channelId}")
+    (ChannelToken(channelId, tokenId, createdAt / 10000L - 11644473600000L, lifetime), nonce)
   }
 
-  /** CLO frame: CloseSecureChannelRequest on the symmetric header. */
-  def writeCloseRequest(out: OutputStream, channel: ChannelToken, seq: SeqState,
-                        requestId: Long, epochMillis: Long): Unit = {
-    val w = new BufWriter(64)
-    w.u32(channel.channelId)
-    w.u32(channel.tokenId)
-    w.u32(seq.next); seq.next += 1
-    w.u32(requestId)
-    nodeId(w, CloseSecureChannelRequestId)
-    requestHeader(w, epochMillis, requestId)
-    writeFrame(out, "CLO", 'F', w.result())
-    out.flush()
+  private def readOpnFrame(in: InputStream, maxFrame: Int): Array[Byte] = {
+    val (tpe, fin, body) = readFrame(in, maxFrame)
+    if (tpe == "ERR") throw decodeError(body)
+    if (tpe != "OPN" || fin != 'F') throw new FramingViolation(s"expected final OPN, got $tpe/$fin")
+    body
   }
+
+  // -------------------------------------------------------- client channel
 
   /** A client-side channel after the full HEL → ACK → OPN handshake: the
-    * revised limits, the issued token, and the per-direction sequence
-    * states the symmetric conversation continues from. The OPN consumed
-    * RequestId 1 — callers continue their request counter from there.
+    * revised limits, the issued token, the per-direction sequence states
+    * the symmetric conversation continues from, the policy, the live
+    * token's seals and the previous token's response seal, accepted while
+    * the server may still answer under it (Part 6 §6.7.4).
     */
   final case class ClientChannel(negotiated: Limits, token: ChannelToken,
-                                 sendSeq: SeqState, recvSeq: SeqState) {
+                                 sendSeq: SeqState, recvSeq: SeqState,
+                                 policy: ChannelPolicy, seals: ChannelSeals,
+                                 previous: Option[(Long, ChunkSeal)]) {
     /** Limits for READING responses: the peer's chunks are bounded by the
       * revised `sendBufferSize` (OUR receive buffer from its side of the
       * negotiation), so the reader must accept up to that — not our own
       * pre-revision receive buffer.
       */
     def readLimits: Limits = negotiated.copy(receiveBufferSize = negotiated.sendBufferSize)
+
+    /** The seal a response stamped with `tokenId` is checked under. */
+    def responseSeal(tokenId: Long): Option[ChunkSeal] =
+      if (tokenId == token.tokenId) Some(seals.server)
+      else previous.collect { case (t, s) if t == tokenId => s }
+
+    /** A writer for one request (MSG or CLO) under the live token. */
+    def writer(out: OutputStream, requestId: Long, messageType: String = "MSG"): MessageWriter =
+      new MessageWriter(out, sendSeq, requestId, negotiated.receiveBufferSize,
+        negotiated.maxChunkCount, token.channelId, token.tokenId, seals.client, messageType)
   }
 
   /** The client half of the connection handshake over established streams:
-    * HEL, ACK (limits revision), OpenSecureChannel(Issue, None). Shared by
-    * the bulk-pull feed client and the Part 4 session client so the
-    * subtle parts — the read-limit swap, ERR handling, sequence-state
-    * birth — exist once. Throws [[OpcuaError]] when the server answers
-    * ERR and [[FramingViolation]] on a contract break; callers own the
-    * socket and must close it on failure.
+    * HEL, ACK (limits revision), OpenSecureChannel(Issue) under `policy`.
+    * Throws [[OpcuaError]] when the server answers ERR and
+    * [[FramingViolation]] on a contract break; callers own the socket and
+    * must close it on failure.
     */
   def openClientChannel(in: InputStream, out: OutputStream, limits: Limits,
                         endpointUrl: String, epochMillis: Long,
-                        requestedLifetimeMs: Long = 3600000L): ClientChannel = {
+                        requestedLifetimeMs: Long = 3600000L,
+                        policy: ChannelPolicy = NonePolicy): ClientChannel = {
     writeFrame(out, "HEL", 'F', encodeHello(Hello(ProtocolVersion, limits, endpointUrl)))
     out.flush()
     val negotiated = readFrame(in, limits.receiveBufferSize) match {
@@ -488,37 +598,45 @@ object OpcuaFraming {
       case ("ERR", _, body) => throw decodeError(body)
       case (t, _, _) => throw new FramingViolation(s"expected ACK, got $t")
     }
-    val sendSeq = new SeqState
-    val recvSeq = new SeqState
-    writeOpenRequest(out, sendSeq, requestId = 1L, epochMillis, requestedLifetimeMs)
-    val token = readOpenResponse(in, recvSeq, limits.receiveBufferSize)
+    val unopened = ClientChannel(negotiated, ChannelToken(0L, 0L, epochMillis, 0L),
+      new SeqState, new SeqState, policy, null, None)
+    exchangeOpn(in, out, unopened, 1L, RequestTypeIssue, epochMillis, requestedLifetimeMs)
+  }
+
+  /** Renew the channel's security token in place (Part 6 §6.7.4): one
+    * OPN(Renew) round-trip on the live channel, continuing both sequence
+    * states, with fresh nonces and so fresh seals. Returns the channel with
+    * the NEW token — the caller swaps it before its next request; the
+    * server keeps honouring the old token until its original lifetime
+    * expires, so in-flight overlap is safe. Call between requests (the
+    * single-in-flight discipline both clients keep).
+    */
+  def renewChannel(in: InputStream, out: OutputStream, channel: ClientChannel,
+                   requestId: Long, epochMillis: Long,
+                   requestedLifetimeMs: Long = 3600000L): ClientChannel = {
+    val renewed = exchangeOpn(in, out, channel, requestId, RequestTypeRenew, epochMillis,
+      requestedLifetimeMs)
+    if (renewed.token.channelId != channel.token.channelId)
+      throw new FramingViolation(
+        s"renew answered on channel ${renewed.token.channelId}, expected ${channel.token.channelId}")
+    renewed.copy(previous = Some((channel.token.tokenId, channel.seals.server)))
+  }
+
+  private def exchangeOpn(in: InputStream, out: OutputStream, ch: ClientChannel,
+                          requestId: Long, requestType: Long, epochMillis: Long,
+                          requestedLifetimeMs: Long): ClientChannel = {
+    val nonce = ch.policy.newNonce()
+    writeOpenRequest(out, ch.sendSeq, requestId, epochMillis, requestedLifetimeMs,
+      ch.token.channelId, requestType, ch.policy, nonce)
+    val (token, serverNonce) =
+      readOpenResponse(in, ch.recvSeq, ch.readLimits.receiveBufferSize, ch.policy)
     // stamp the token with LOCAL receipt time: the renewal deadline is
     // computed against the client's clock, and trusting the server's
     // CreatedAt would shift the 75% point by whatever the two clocks
     // diverge (a server clock in the past forces a renew round-trip
     // before EVERY request; one far ahead renews after expiry)
-    ClientChannel(negotiated, token.copy(createdAtMillis = epochMillis), sendSeq, recvSeq)
-  }
-
-  /** Renew the channel's security token in place (Part 6 §6.7.4): one
-    * OPN(Renew) round-trip on the live channel, continuing both sequence
-    * states. Returns the channel with the NEW token — the caller swaps it
-    * before its next request; the server keeps honouring the old token
-    * until its original lifetime expires, so in-flight overlap is safe.
-    * Call between requests (the single-in-flight discipline both clients
-    * already keep).
-    */
-  def renewChannel(in: InputStream, out: OutputStream, channel: ClientChannel,
-                   requestId: Long, epochMillis: Long,
-                   requestedLifetimeMs: Long = 3600000L): ClientChannel = {
-    writeOpenRequest(out, channel.sendSeq, requestId, epochMillis, requestedLifetimeMs,
-      channelId = channel.token.channelId, requestType = RequestTypeRenew)
-    val renewed = readOpenResponse(in, channel.recvSeq, channel.readLimits.receiveBufferSize)
-    if (renewed.channelId != channel.token.channelId)
-      throw new FramingViolation(
-        s"renew answered on channel ${renewed.channelId}, expected ${channel.token.channelId}")
-    // local receipt stamp, same reason as openClientChannel
-    channel.copy(token = renewed.copy(createdAtMillis = epochMillis))
+    ch.copy(token = token.copy(createdAtMillis = epochMillis),
+      seals = ch.policy.seals(nonce, serverNonce))
   }
 
   /** True when `token` has consumed ≥ 75 % of its lifetime — the renewal
@@ -528,6 +646,84 @@ object OpcuaFraming {
   def shouldRenew(token: ChannelToken, nowMillis: Long): Boolean =
     nowMillis - token.createdAtMillis >= token.lifetimeMs * 3 / 4
 
+  /** A client's conversation on one open channel: the round trip the bulk
+    * feed client and the Part 4 session client share. Requests are
+    * single-in-flight and numbered from 2 (the OPN took RequestId 1).
+    */
+  final class ClientConversation(in: InputStream, out: OutputStream, opened: ClientChannel,
+                                 requestedLifetimeMs: Long) {
+    private var ch = opened
+    private var lastId = 1L
+    /** Response chunks read so far. */
+    var chunksRead = 0L
+
+    def channel: ClientChannel = ch
+    /** The RequestId of the request `call` is encoding. */
+    def requestId: Long = lastId
+
+    /** One OPN(Renew) round trip, swapping in the fresh token. */
+    def renew(): Unit = {
+      lastId += 1
+      ch = renewChannel(in, out, ch, lastId, System.currentTimeMillis(), requestedLifetimeMs)
+    }
+
+    /** Send one request and return the response body. The token is
+      * renewed first once 75% of its lifetime is spent; an ERR answer to
+      * that renewal means the channel is dead and surfaces as an
+      * IOException, like a broken connection. A response to another
+      * request is a FramingViolation: a desynced stream must fail loudly,
+      * never decode another request's response.
+      */
+    def call(encode: ChunkSink => Unit): Array[Byte] = {
+      if (shouldRenew(ch.token, System.currentTimeMillis()))
+        try renew()
+        catch { case e: OpcuaError =>
+          throw new java.io.IOException(s"token renewal rejected: ${e.getMessage}")
+        }
+      lastId += 1
+      val mw = ch.writer(out, lastId)
+      encode(mw)
+      mw.finish()
+      val before = ch.recvSeq.next
+      val (rid, body) = readConversation(in, ch.recvSeq, ch.readLimits, ch.token.channelId,
+        ch.responseSeal, allowOpn = false)
+      chunksRead += ch.recvSeq.next - before
+      if (rid != lastId) throw new FramingViolation(s"response for request $rid, expected $lastId")
+      body
+    }
+
+    /** Best-effort CLO, Part 6's orderly shutdown: a CloseSecureChannel
+      * request on the symmetric header, sealed like any request. The
+      * caller closes the socket either way.
+      */
+    def close(): Unit =
+      try {
+        lastId += 1
+        val body = requestHeader(nodeId(new BufWriter(64), CloseSecureChannelRequestId),
+          System.currentTimeMillis(), lastId)
+        val w = ch.writer(out, lastId, "CLO")
+        w.raw(body.result())
+        w.finish()
+      } catch { case _: Exception => () }
+  }
+
+  object ClientConversation {
+    /** Connect `sock` and open a channel over it under `policy`. Callers
+      * own the socket and close it when this throws.
+      */
+    def connect(sock: java.net.Socket, host: String, port: Int, timeoutMs: Int,
+                limits: Limits, policy: ChannelPolicy,
+                requestedLifetimeMs: Long): ClientConversation = {
+      sock.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
+      sock.setSoTimeout(timeoutMs)
+      val in = new java.io.BufferedInputStream(sock.getInputStream, 1 << 16)
+      val out = new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16)
+      val ch = openClientChannel(in, out, limits, s"opc.tcp://$host:$port/graft",
+        System.currentTimeMillis(), requestedLifetimeMs, policy)
+      new ClientConversation(in, out, ch, requestedLifetimeMs)
+    }
+  }
+
   // ------------------------------------------------------ chunked MSG I/O
 
   /** Per-direction sequence-number state (Part 6 §6.7.2: strictly
@@ -535,10 +731,8 @@ object OpcuaFraming {
     */
   final class SeqState { var next: Long = 1L }
 
-  /** The incremental writer interface MSG response producers encode
-    * through — one implementation per security mode (plaintext
-    * [[MessageWriter]], secured [[OpcuaSecure.SecureMessageWriter]]) so
-    * service dispatch is mode-blind.
+  /** The incremental writer interface MSG producers encode through, so
+    * service dispatch never sees the channel's policy.
     */
   trait ChunkSink {
     def u8(v: Int): this.type
@@ -552,45 +746,42 @@ object OpcuaFraming {
     def finish(): Unit
   }
 
-  /** Streaming chunk writer for one MSG message: primitives encode
-    * directly into the chunk buffer; when a write would overflow the
-    * negotiated chunk size the buffer flushes as an intermediate `C`
-    * chunk and the write continues into the next one. `finish()` emits
-    * the final `F` chunk (always, even when empty — the receiver needs
-    * the final marker). Enforces the peer's receive-buffer chunk bound
-    * and the negotiated per-message chunk count.
+  /** Streaming chunk writer for one message (MSG, or CLO): primitives
+    * encode directly into the chunk buffer after its 24 header bytes; when
+    * a write would overflow the negotiated chunk size the buffer is sealed
+    * and sent as an intermediate `C` chunk and the write continues into
+    * the next one. `finish()` emits the final `F` chunk (always, even when
+    * empty — the receiver needs the final marker). The chunk bound is the
+    * peer's receive buffer, less what `seal` appends; the negotiated
+    * per-message chunk count is enforced.
     */
-  final class MessageWriter(out: OutputStream, seq: SeqState, requestId: Long,
-                            peerReceiveBufferSize: Int, maxChunkCount: Long,
-                            channelId: Long = 0L, tokenId: Long = 0L) extends ChunkSink {
-    private val cap = peerReceiveBufferSize - ChunkOverhead
-    require(cap > 0)
+  class MessageWriter(out: OutputStream, seq: SeqState, requestId: Long,
+                      peerReceiveBufferSize: Int, maxChunkCount: Long,
+                      channelId: Long = 0L, tokenId: Long = 0L,
+                      seal: ChunkSeal = PlainChunks,
+                      messageType: String = "MSG") extends ChunkSink {
     private val chunk = new Array[Byte](peerReceiveBufferSize)
-    private var n = 0 // payload bytes in the current chunk
+    private val cap = peerReceiveBufferSize - seal.overhead // where a body must end
+    require(cap > ChunkOverhead)
+    private var n = ChunkOverhead // write position
     private var chunks = 0L
+    System.arraycopy(messageType.getBytes(StandardCharsets.US_ASCII), 0, chunk, 0, 3)
+    putU32(chunk, 8, channelId) // the OPN-issued secure channel (0 before open)
+    putU32(chunk, 12, tokenId)
+    putU32(chunk, 20, requestId)
 
     private def flush(fin: Char): Unit = {
       chunks += 1
       if (maxChunkCount != 0 && chunks > maxChunkCount)
         throw new FramingViolation(s"message exceeds negotiated MaxChunkCount=$maxChunkCount")
-      val w = new BufWriter(ChunkOverhead + n)
-      w.raw("MSG".getBytes(StandardCharsets.US_ASCII)).u8(fin).u32(ChunkOverhead.toLong + n)
-      w.u32(channelId) // the OPN-issued secure channel (0 before open)
-      w.u32(tokenId)
-      w.u32(seq.next); seq.next += 1
-      w.u32(requestId)
-      out.write(w.result())
-      out.write(chunk, 0, n)
-      n = 0
+      chunk(3) = fin.toByte
+      putU32(chunk, 16, seq.next); seq.next += 1
+      seal.seal(out, chunk, n)
+      n = ChunkOverhead
     }
     private def room(k: Int): Unit = if (n + k > cap) flush('C')
     def u8(v: Int): this.type = { room(1); chunk(n) = v.toByte; n += 1; this }
-    def u32(v: Long): this.type = {
-      room(4)
-      chunk(n) = v.toByte; chunk(n + 1) = (v >>> 8).toByte
-      chunk(n + 2) = (v >>> 16).toByte; chunk(n + 3) = (v >>> 24).toByte
-      n += 4; this
-    }
+    def u32(v: Long): this.type = { room(4); putU32(chunk, n, v); n += 4; this }
     def i32(v: Int): this.type = u32(v.toLong & 0xFFFFFFFFL)
     def i64(v: Long): this.type = { u32(v & 0xFFFFFFFFL); u32(v >>> 32) }
     def f64(v: Double): this.type = i64(java.lang.Double.doubleToLongBits(v))
@@ -614,26 +805,30 @@ object OpcuaFraming {
     def finish(): Unit = { flush('F'); out.flush() }
   }
 
-  /** Read and reassemble one chunked MSG into (requestId, body bytes).
-    * Verifies the §6.7.2 discipline: MSG type, per-chunk size within our
-    * receive buffer, channel/token = 0, sequence numbers consecutive,
-    * one RequestId per message, chunk count and reassembled size within
-    * the negotiated limits. An `A` chunk aborts the message (its body is
-    * an ERR payload); an ERR frame raises [[OpcuaError]].
+  /** [[readConversation]] for one plaintext MSG under one token. Kept
+    * under this name because perfbench's WireBench compiles against it.
     */
   def readMessage(in: InputStream, seq: SeqState, limits: Limits,
                   channelId: Long = 0L, tokenId: Long = 0L): (Long, Array[Byte]) =
-    readConversation(in, seq, limits, channelId, _ == tokenId, allowOpn = false)
+    readConversation(in, seq, limits, channelId, t => Option.when(t == tokenId)(PlainChunks),
+      allowOpn = false)
 
-  /** As [[readMessage]], but with a token-acceptance predicate (a server
-    * honours the PREVIOUS token until its lifetime expires after a renew
-    * — Part 6 §6.7.4) and, when `allowOpn`, surfacing a mid-conversation
-    * OPN frame (a Renew request) as `(-1L, rawFrameBody)` instead of a
-    * violation. An OPN is only legal BETWEEN messages — once MSG chunks
-    * have started it is a framing violation like any other type.
+  /** Read and reassemble one chunked message into (requestId, body bytes).
+    * Verifies the §6.7.2 discipline: per-chunk size within our receive
+    * buffer, the channel id, a live token — `sealFor` gives the seal of a
+    * token the reader still honours (a server honours the PREVIOUS token
+    * until its lifetime expires after a renew, Part 6 §6.7.4) — each
+    * chunk's seal, sequence numbers consecutive, one RequestId per
+    * message, chunk count and reassembled size within the negotiated
+    * limits. An `A` chunk aborts the message (its body is an ERR payload);
+    * an ERR frame raises [[OpcuaError]]; a CLO, checked like a MSG chunk,
+    * ends the conversation as an EOF. When `allowOpn`, an OPN frame (a
+    * Renew request) surfaces as `(-1L, rawFrameBody)` — only BETWEEN
+    * messages; once MSG chunks have started it is a violation like any
+    * other type.
     */
-  def readConversation(in: InputStream, seq: SeqState, limits: Limits,
-                       channelId: Long, tokenOk: Long => Boolean,
+  def readConversation(in: InputStream, seq: SeqState, limits: Limits, channelId: Long,
+                       sealFor: Long => Option[ChunkSeal],
                        allowOpn: Boolean): (Long, Array[Byte]) = {
     val body = new java.io.ByteArrayOutputStream(1024)
     var requestId = -1L
@@ -642,20 +837,17 @@ object OpcuaFraming {
       val (tpe, fin, frame) = readFrame(in, limits.receiveBufferSize)
       tpe match {
         case "ERR" => throw decodeError(frame)
-        case "CLO" => throw new EOFException("secure channel closed by peer")
         case "OPN" if allowOpn && chunks == 0 && fin == 'F' =>
           return (-1L, frame)
-        case "MSG" =>
+        case "MSG" | "CLO" =>
           val r = new BufReader(frame)
           val channel = r.u32(); val token = r.u32()
-          if (channel != channelId || !tokenOk(token))
+          val seal = (if (channel == channelId) sealFor(token) else None).getOrElse(
             throw new OpcuaError(BadSecureChannelIdInvalid,
-              s"chunk on channel $channel/$token, expected $channelId with a live token")
-          val sn = r.u32()
-          if (sn != seq.next)
-            throw new FramingViolation(s"sequence number $sn, expected ${seq.next}")
-          seq.next += 1
-          val rid = r.u32()
+              s"chunk on channel $channel/$token, expected $channelId with a live token"))
+          val end = seal.unseal(tpe, fin, frame)
+          val rid = readSequenceHeader(r, seq)
+          if (tpe == "CLO") throw new EOFException("secure channel closed by peer")
           if (requestId == -1L) requestId = rid
           else if (rid != requestId)
             throw new FramingViolation(s"request id $rid mid-message, expected $requestId")
@@ -663,9 +855,10 @@ object OpcuaFraming {
           if (limits.maxChunkCount != 0 && chunks > limits.maxChunkCount)
             throw new FramingViolation(s"message exceeds MaxChunkCount=${limits.maxChunkCount}")
           fin match {
-            case 'A' => throw decodeError(frame.drop(16)) // abort carries ERR payload
+            case 'A' => // abort carries ERR payload
+              throw decodeError(java.util.Arrays.copyOfRange(frame, 16, end))
             case 'C' | 'F' =>
-              body.write(frame, 16, frame.length - 16)
+              body.write(frame, 16, end - 16)
               if (limits.maxMessageSize != 0 && body.size() > limits.maxMessageSize)
                 throw new FramingViolation(s"message exceeds MaxMessageSize=${limits.maxMessageSize}")
               if (fin == 'F') return (requestId, body.toByteArray)

@@ -2,14 +2,14 @@ package graft.sources
 
 import java.io.{InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
-import java.security.SecureRandom
 
 import OpcuaFraming._
 import OpcuaCrypto._
 
-/** OPC UA Part 6 §6.7 secure-conversation chunk securing for
-  * SecurityPolicy Basic256Sha256 — the Sign / SignAndEncrypt halves the
-  * plaintext layer in [[OpcuaFraming]] marks as its remaining surface.
+/** SecurityPolicy Basic256Sha256 (Sign / SignAndEncrypt) as a
+  * [[OpcuaFraming.ChannelPolicy]]: the OPN wrap, the nonces and the
+  * MSG/CLO chunk seals that the policy-blind channel in [[OpcuaFraming]]
+  * asks for (Part 6 §6.7).
   *
   * Chunk layouts (Part 6 §6.7.2, securing applied sign-then-encrypt):
   *
@@ -25,7 +25,7 @@ import OpcuaCrypto._
   * the RECEIVER's public key, so the MessageSize field — inside the
   * signed region — must be the final encrypted size, computed up front.
   *
-  * MSG (symmetric, keys derived from the OPN nonces via P_SHA256):
+  * MSG and CLO (symmetric, keys derived from the OPN nonces via P_SHA256):
   * {{{
   * | header(8) | SecureChannelId(4) | TokenId(4) |                         <- plaintext, signed
   * | seq(4) rid(4) | body | [padding] | HMAC-SHA256 sig(32) |              <- AES-256-CBC if SignAndEncrypt
@@ -40,9 +40,9 @@ import OpcuaCrypto._
   *
   * Trust model: the client pins the server certificate it discovered via
   * GetEndpoints (byte-equality against the asymmetric header); the server
-  * accepts any syntactically valid client certificate (trust-on-first-use
-  * — a production deployment would check a trust list before
-  * `readSecuredOpen` returns).
+  * accepts any syntactically valid client certificate on the Issue and
+  * pins it for the channel's renewals (trust-on-first-use — a production
+  * deployment would check a trust list before the Issue is answered).
   */
 object OpcuaSecure {
 
@@ -53,6 +53,47 @@ object OpcuaSecure {
   final case class SecuritySetup(mode: Long, local: Identity, serverCertDer: Array[Byte]) {
     require(mode == SecurityModeSign || mode == SecurityModeSignAndEncrypt,
       s"securable modes are Sign/SignAndEncrypt, got $mode")
+    def policy: ChannelPolicy = Basic256Sha256(mode, local, serverCertDer)
+  }
+
+  object SecuritySetup {
+    /** A client's channel policy: SecurityPolicy None without a setup. */
+    def policyOf(setup: Option[SecuritySetup]): ChannelPolicy =
+      setup.fold[ChannelPolicy](NonePolicy)(_.policy)
+  }
+
+  /** SecurityPolicy Basic256Sha256. `peerCertDer` is the certificate every
+    * OPN from the peer must carry: on a client the discovered server
+    * certificate; on a server the Issue's sender certificate, null until
+    * [[bind]] (trust on first use). `mode` 0 is a server's policy before an
+    * Issue has chosen Sign or SignAndEncrypt.
+    */
+  final case class Basic256Sha256(mode: Long, local: Identity, peerCertDer: Array[Byte])
+      extends ChannelPolicy {
+    override def accepts(requested: Long): Boolean =
+      if (mode == 0L) requested == SecurityModeSign || requested == SecurityModeSignAndEncrypt
+      else requested == mode
+    override def bind(m: Long, cert: Array[Byte]): ChannelPolicy = copy(mode = m, peerCertDer = cert)
+    def newNonce(): Array[Byte] = OpcuaCrypto.newNonce()
+    def checkNonce(nonce: Array[Byte], side: String): Unit = {
+      val len = if (nonce == null) -1 else nonce.length
+      if (len != NonceLength)
+        throw new OpcuaError(BadSecurityChecksFailed, s"$side nonce $len B, need $NonceLength")
+    }
+    def writeOpn(out: OutputStream, seq: SeqState, channelId: Long, requestId: Long,
+                 payload: BufWriter => Unit): Unit =
+      writeSecuredOpnChunk(out, seq, channelId, requestId, local, peerCertDer, payload)
+    def readOpn(frameBody: Array[Byte], seq: SeqState): OpnChunk = {
+      val opn = readSecuredOpnChunk(frameBody, seq, local)
+      if (peerCertDer != null && !java.util.Arrays.equals(opn.senderCertDer, peerCertDer))
+        throw new OpcuaError(BadSecurityChecksFailed,
+          "sender certificate does not match the pinned certificate")
+      opn
+    }
+    def seals(clientNonce: Array[Byte], serverNonce: Array[Byte]): ChannelSeals = {
+      val keys = deriveChannelKeys(clientNonce, serverNonce)
+      ChannelSeals(new SymmetricSeal(mode, keys.clientKeys), new SymmetricSeal(mode, keys.serverKeys))
+    }
   }
 
   // ------------------------------------------------------ asymmetric OPN
@@ -124,20 +165,13 @@ object OpcuaSecure {
     out.flush()
   }
 
-  /** One decrypted + verified OPN chunk: the frame's channel id, the
-    * sender's certificate (the peer identity — callers pin or trust it),
-    * and a reader positioned at the service payload (after the sequence
-    * header, which has already been validated against `seq`).
-    */
-  final case class SecuredOpn(channelId: Long, senderCertDer: Array[Byte], payload: BufReader)
-
   /** Unsecure one already-read OPN frame body (header stripped by
     * `readFrame`). Order: decrypt with OUR private key, verify the
     * RSA-SHA256 signature with the SENDER's certificate, check the
     * receiver thumbprint names OUR certificate, strip padding, validate
     * the sequence number.
     */
-  def readSecuredOpnChunk(frameBody: Array[Byte], seq: SeqState, local: Identity): SecuredOpn = {
+  def readSecuredOpnChunk(frameBody: Array[Byte], seq: SeqState, local: Identity): OpnChunk = {
     val r = new BufReader(frameBody)
     val channelId = r.u32()
     val uri = r.str()
@@ -189,355 +223,92 @@ object OpcuaSecure {
       i += 1
     }
     val pr = new BufReader(java.util.Arrays.copyOfRange(plain, 0, bodyEnd))
-    val sn = pr.u32()
-    if (sn != seq.next) throw new FramingViolation(s"sequence number $sn, expected ${seq.next}")
-    seq.next += 1
-    pr.u32() // RequestId (single-in-flight correlation, as the None path)
-    SecuredOpn(channelId, senderCertDer, pr)
-  }
-
-  /** Secured OpenSecureChannel request (Issue or Renew) with a fresh
-    * 32-byte nonce in the body.
-    */
-  def writeSecuredOpenRequest(out: OutputStream, seq: SeqState, requestId: Long,
-                              epochMillis: Long, requestedLifetimeMs: Long,
-                              mode: Long, local: Identity, remoteCertDer: Array[Byte],
-                              clientNonce: Array[Byte], channelId: Long = 0L,
-                              requestType: Long = RequestTypeIssue): Unit =
-    writeSecuredOpnChunk(out, seq, channelId, requestId, local, remoteCertDer, { w =>
-      nodeId(w, OpenSecureChannelRequestId)
-      requestHeader(w, epochMillis, requestId)
-      w.u32(ProtocolVersion.toLong)
-      w.u32(requestType)
-      w.u32(mode)
-      w.i32(clientNonce.length).raw(clientNonce)
-      w.u32(requestedLifetimeMs)
-    })
-
-  /** Parse the service payload of a secured OPN request chunk. */
-  def parseSecuredOpenRequest(opn: SecuredOpn): (Long, OpenSecureChannelRequest, Array[Byte]) = {
-    val r = opn.payload
-    if (readNodeId(r) != OpenSecureChannelRequestId)
-      throw new FramingViolation("secured OPN body is not an OpenSecureChannelRequest")
-    val handle = skipRequestHeader(r)
-    val ver = r.u32(); val reqType = r.u32(); val mode = r.u32()
-    val nonceLen = r.i32()
-    if (nonceLen != NonceLength)
-      throw new OpcuaError(BadSecurityChecksFailed, s"client nonce $nonceLen B, need $NonceLength")
-    val nonce = r.bytes(nonceLen)
-    val lifetime = r.u32()
-    if (reqType == RequestTypeIssue && opn.channelId != 0L)
-      throw new FramingViolation("OPN Issue must carry SecureChannelId 0")
-    (handle, OpenSecureChannelRequest(handle, ver, reqType, mode, lifetime, opn.channelId), nonce)
-  }
-
-  def writeSecuredOpenResponse(out: OutputStream, seq: SeqState, requestHandle: Long,
-                               epochMillis: Long, token: ChannelToken,
-                               local: Identity, remoteCertDer: Array[Byte],
-                               serverNonce: Array[Byte]): Unit =
-    writeSecuredOpnChunk(out, seq, token.channelId, requestHandle, local, remoteCertDer, { w =>
-      nodeId(w, OpenSecureChannelResponseId)
-      w.i64(toFiletime(epochMillis))
-      w.u32(requestHandle)
-      w.u32(GoodStatus)
-      w.u8(0x00)
-      w.i32(-1)
-      w.u8(0x00).u8(0x00).u8(0x00)
-      w.u32(ProtocolVersion.toLong)
-      w.u32(token.channelId)
-      w.u32(token.tokenId)
-      w.i64(toFiletime(token.createdAtMillis))
-      w.u32(token.lifetimeMs)
-      w.i32(serverNonce.length).raw(serverNonce)
-    })
-
-  /** Read + unsecure an OPN response; pins the sender certificate against
-    * the expected server certificate (the GetEndpoints-discovered one).
-    */
-  def readSecuredOpenResponse(in: InputStream, seq: SeqState, local: Identity,
-                              expectedServerCertDer: Array[Byte],
-                              maxFrame: Int): (ChannelToken, Array[Byte]) = {
-    val (tpe, fin, body) = readFrame(in, maxFrame)
-    if (tpe == "ERR") throw decodeError(body)
-    if (tpe != "OPN" || fin != 'F') throw new FramingViolation(s"expected final OPN, got $tpe/$fin")
-    parseSecuredOpenResponse(body, seq, local, expectedServerCertDer)
-  }
-
-  def parseSecuredOpenResponse(frameBody: Array[Byte], seq: SeqState, local: Identity,
-                               expectedServerCertDer: Array[Byte]): (ChannelToken, Array[Byte]) = {
-    val opn = readSecuredOpnChunk(frameBody, seq, local)
-    if (!java.util.Arrays.equals(opn.senderCertDer, expectedServerCertDer))
-      throw new OpcuaError(BadSecurityChecksFailed,
-        "server certificate does not match the pinned endpoint certificate")
-    val r = opn.payload
-    if (readNodeId(r) != OpenSecureChannelResponseId)
-      throw new FramingViolation("secured OPN body is not an OpenSecureChannelResponse")
-    r.i64(); r.u32()
-    val status = r.u32()
-    if (status != GoodStatus) throw new OpcuaError(status, "OpenSecureChannel failed")
-    r.u8(); r.i32(); readNodeId(r); r.u8()
-    r.u32() // server protocol version
-    val channelId = r.u32(); val tokenId = r.u32()
-    val createdAt = r.i64(); val lifetime = r.u32()
-    val nonceLen = r.i32()
-    if (nonceLen != NonceLength)
-      throw new OpcuaError(BadSecurityChecksFailed, s"server nonce $nonceLen B, need $NonceLength")
-    val serverNonce = r.bytes(nonceLen)
-    if (channelId != opn.channelId)
-      throw new FramingViolation(s"token channel $channelId != frame channel ${opn.channelId}")
-    (ChannelToken(channelId, tokenId, createdAt / 10000L - 11644473600000L, lifetime), serverNonce)
+    OpnChunk(channelId, readSequenceHeader(pr, seq), senderCertDer, pr)
   }
 
   // ------------------------------------------------------- symmetric MSG
 
-  /** Secured drop-in for [[OpcuaFraming.MessageWriter]]: same incremental
-    * interface, each flushed chunk signed (HMAC-SHA256 with `sendKeys`)
-    * and, in SignAndEncrypt, AES-256-CBC encrypted after the security
-    * header.
+  /** Basic256Sha256's seal of one direction's MSG/CLO chunks (Part 6
+    * §6.7.2): Sign appends an HMAC-SHA256 of the whole chunk;
+    * SignAndEncrypt first pads the body to the AES block and then encrypts
+    * everything after the TokenId with AES-256-CBC.
+    */
+  final class SymmetricSeal(mode: Long, keys: DirectionKeys) extends ChunkSeal {
+    private val encrypting = mode == SecurityModeSignAndEncrypt
+    // worst case per chunk: the 32 B MAC plus up to 16 B of padding
+    val overhead: Int = SymSignatureLength + (if (encrypting) SymBlockLength else 0)
+
+    def seal(out: OutputStream, chunk: Array[Byte], end: Int): Unit = {
+      // PaddingSize + 1 bytes, each equal to PaddingSize, so that the
+      // sequence header, body, padding and MAC fill whole AES blocks
+      val padTotal =
+        if (!encrypting) 0
+        else (SymBlockLength - (end - 16 + 1 + SymSignatureLength) % SymBlockLength) %
+          SymBlockLength + 1
+      java.util.Arrays.fill(chunk, end, end + padTotal, (padTotal - 1).toByte)
+      val signed = end + padTotal
+      val total = signed + SymSignatureLength
+      putU32(chunk, 4, total)
+      System.arraycopy(hmacSha256(keys.signingKey, chunk, 0, signed), 0, chunk, signed,
+        SymSignatureLength)
+      if (encrypting) {
+        out.write(chunk, 0, 16)
+        out.write(aesCbc(encrypt = true, keys, chunk, 16, total - 16))
+      } else out.write(chunk, 0, total)
+    }
+
+    def unseal(tpe: String, fin: Char, frame: Array[Byte]): Int = {
+      if (encrypting) {
+        val region = frame.length - 8
+        if (region <= 0 || region % SymBlockLength != 0)
+          throw new OpcuaError(BadSecurityChecksFailed,
+            s"encrypted region $region not AES-block aligned")
+        System.arraycopy(aesCbc(encrypt = false, keys, frame, 8, region), 0, frame, 8, region)
+      }
+      if (frame.length < 16 + SymSignatureLength)
+        throw new OpcuaError(BadSecurityChecksFailed, "secured chunk too short")
+      val sigOff = frame.length - SymSignatureLength
+      // the MAC covers the message header readFrame consumed
+      val mac = hmac(keys.signingKey)
+      mac.update(frameHeader(tpe, fin, frame.length + 8))
+      mac.update(frame, 0, sigOff)
+      if (!java.security.MessageDigest.isEqual(mac.doFinal(),
+          java.util.Arrays.copyOfRange(frame, sigOff, frame.length)))
+        throw new OpcuaError(BadSecurityChecksFailed, "chunk MAC verification failed")
+      if (!encrypting) sigOff
+      else {
+        val ps = frame(sigOff - 1) & 0xFF
+        val start = sigOff - ps - 1
+        if (start < 16) throw new OpcuaError(BadSecurityChecksFailed, "padding overruns the chunk")
+        var i = start
+        while (i < sigOff) {
+          if ((frame(i) & 0xFF) != ps)
+            throw new OpcuaError(BadSecurityChecksFailed, "inconsistent padding bytes")
+          i += 1
+        }
+        start
+      }
+    }
+  }
+
+  /** A [[MessageWriter]] under a [[SymmetricSeal]]. Kept under this name
+    * because perfbench's WireBench compiles against it.
     */
   final class SecureMessageWriter(out: OutputStream, seq: SeqState, requestId: Long,
                                   peerReceiveBufferSize: Int, maxChunkCount: Long,
                                   channelId: Long, tokenId: Long,
-                                  mode: Long, sendKeys: DirectionKeys) extends ChunkSink {
-    private val encrypting = mode == SecurityModeSignAndEncrypt
-    // worst-case securing overhead per chunk: 24B headers + 32B MAC + up
-    // to 16B padding — the payload cap keeps the SECURED chunk inside the
-    // peer's receive buffer
-    private val cap = peerReceiveBufferSize - ChunkOverhead - SymSignatureLength -
-      (if (encrypting) SymBlockLength else 0)
-    require(cap > 0)
-    private val chunk = new Array[Byte](cap)
-    private var n = 0
-    private var chunks = 0L
+                                  mode: Long, sendKeys: DirectionKeys)
+    extends MessageWriter(out, seq, requestId, peerReceiveBufferSize, maxChunkCount,
+      channelId, tokenId, new SymmetricSeal(mode, sendKeys))
 
-    private def flush(fin: Char): Unit = {
-      chunks += 1
-      if (maxChunkCount != 0 && chunks > maxChunkCount)
-        throw new FramingViolation(s"message exceeds negotiated MaxChunkCount=$maxChunkCount")
-      val padTotal =
-        if (!encrypting) 0
-        else {
-          val unpadded = 8 + n + 1 + SymSignatureLength
-          (SymBlockLength - (unpadded % SymBlockLength)) % SymBlockLength + 1
-        }
-      val padSize = math.max(0, padTotal - 1)
-      val total = ChunkOverhead + n + padTotal + SymSignatureLength
-      val w = new BufWriter(total)
-      w.raw(frameHeader("MSG", fin, total))
-      w.u32(channelId).u32(tokenId)
-      w.u32(seq.next); seq.next += 1
-      w.u32(requestId)
-      w.raw(java.util.Arrays.copyOf(chunk, n))
-      var i = 0
-      while (i < padTotal) { w.u8(padSize); i += 1 }
-      val head = w.result() // header .. padding (all signed bytes)
-      val sig = hmacSha256(sendKeys.signingKey, head, 0, head.length)
-      if (encrypting) {
-        val plainRegion = new Array[Byte](head.length - 16 + SymSignatureLength)
-        System.arraycopy(head, 16, plainRegion, 0, head.length - 16)
-        System.arraycopy(sig, 0, plainRegion, head.length - 16, SymSignatureLength)
-        out.write(head, 0, 16)
-        out.write(aesCbc(encrypt = true, sendKeys, plainRegion, 0, plainRegion.length))
-      } else {
-        out.write(head)
-        out.write(sig)
-      }
-      n = 0
-    }
-    private def room(k: Int): Unit = if (n + k > cap) flush('C')
-    def u8(v: Int): this.type = { room(1); chunk(n) = v.toByte; n += 1; this }
-    def u32(v: Long): this.type = {
-      room(4)
-      chunk(n) = v.toByte; chunk(n + 1) = (v >>> 8).toByte
-      chunk(n + 2) = (v >>> 16).toByte; chunk(n + 3) = (v >>> 24).toByte
-      n += 4; this
-    }
-    def i32(v: Int): this.type = u32(v.toLong & 0xFFFFFFFFL)
-    def i64(v: Long): this.type = { u32(v & 0xFFFFFFFFL); u32(v >>> 32) }
-    def f64(v: Double): this.type = i64(java.lang.Double.doubleToLongBits(v))
-    def bool(v: Boolean): this.type = u8(if (v) 1 else 0)
-    def str(s: String): this.type =
-      if (s == null) i32(-1)
-      else { val b = s.getBytes(StandardCharsets.UTF_8); i32(b.length); raw(b) }
-    def raw(b: Array[Byte]): this.type = {
-      var off = 0
-      while (off < b.length) {
-        if (n == cap) flush('C')
-        val k = math.min(cap - n, b.length - off)
-        System.arraycopy(b, off, chunk, n, k)
-        n += k; off += k
-      }
-      this
-    }
-    def finish(): Unit = { flush('F'); out.flush() }
-  }
-
-  /** Read + unsecure one chunked secured MSG into (requestId, body).
-    * Mirrors [[OpcuaFraming.readConversation]]'s discipline (sequence
-    * numbers, one RequestId, negotiated limits, abort chunks, OPN
-    * surfacing for renewals) with per-chunk decrypt + MAC verify first.
-    * `keysFor` resolves the VERIFY/DECRYPT keys by token id — the server
-    * honours the previous token through its grace window, so the keys
-    * must switch with the token the sender actually used.
+  /** [[readConversation]] under the [[SymmetricSeal]] of each token's
+    * keys. Kept under this name because perfbench's WireBench compiles
+    * against it.
     */
   def readSecureConversation(in: InputStream, seq: SeqState, limits: Limits,
                              channelId: Long, mode: Long,
                              keysFor: Long => Option[DirectionKeys],
-                             allowOpn: Boolean): (Long, Array[Byte]) = {
-    val encrypting = mode == SecurityModeSignAndEncrypt
-    val body = new java.io.ByteArrayOutputStream(1024)
-    var requestId = -1L
-    var chunks = 0L
-    while (true) {
-      val (tpe, fin, frame) = readFrame(in, limits.receiveBufferSize)
-      tpe match {
-        case "ERR" => throw decodeError(frame)
-        case "CLO" => throw new java.io.EOFException("secure channel closed by peer")
-        case "OPN" if allowOpn && chunks == 0 && fin == 'F' =>
-          return (-1L, frame)
-        case "MSG" =>
-          val hr = new BufReader(frame)
-          val channel = hr.u32(); val token = hr.u32()
-          if (channel != channelId)
-            throw new OpcuaError(BadSecureChannelIdInvalid,
-              s"chunk on channel $channel, expected $channelId")
-          val keys = keysFor(token).getOrElse(throw new OpcuaError(
-            BadSecureChannelIdInvalid, s"no live keys for token $token"))
-          // reassemble the full on-wire chunk for MAC verification
-          val full = new BufWriter(8 + frame.length)
-            .raw(frameHeader("MSG", fin, frame.length + 8)).raw(frame).result()
-          val plainFull =
-            if (!encrypting) full
-            else {
-              val region = full.length - 16
-              if (region <= 0 || region % SymBlockLength != 0)
-                throw new OpcuaError(BadSecurityChecksFailed,
-                  s"encrypted region $region not AES-block aligned")
-              val dec = aesCbc(encrypt = false, keys, full, 16, region)
-              val o = new Array[Byte](full.length)
-              System.arraycopy(full, 0, o, 0, 16)
-              System.arraycopy(dec, 0, o, 16, dec.length)
-              o
-            }
-          if (plainFull.length < ChunkOverhead + SymSignatureLength)
-            throw new OpcuaError(BadSecurityChecksFailed, "secured chunk too short")
-          val sigOff = plainFull.length - SymSignatureLength
-          val expect = hmacSha256(keys.signingKey, plainFull, 0, sigOff)
-          if (!MessageDigestIsEqual(expect, plainFull, sigOff))
-            throw new OpcuaError(BadSecurityChecksFailed, "chunk MAC verification failed")
-          val padTotal =
-            if (!encrypting) 0
-            else {
-              val ps = plainFull(sigOff - 1) & 0xFF
-              var i = sigOff - ps - 1
-              if (i < ChunkOverhead)
-                throw new OpcuaError(BadSecurityChecksFailed, "padding overruns the chunk")
-              while (i < sigOff) {
-                if ((plainFull(i) & 0xFF) != ps)
-                  throw new OpcuaError(BadSecurityChecksFailed, "inconsistent padding bytes")
-                i += 1
-              }
-              ps + 1
-            }
-          val sr = new BufReader(java.util.Arrays.copyOfRange(plainFull, 16, 24))
-          val sn = sr.u32()
-          if (sn != seq.next)
-            throw new FramingViolation(s"sequence number $sn, expected ${seq.next}")
-          seq.next += 1
-          val rid = sr.u32()
-          if (requestId == -1L) requestId = rid
-          else if (rid != requestId)
-            throw new FramingViolation(s"request id $rid mid-message, expected $requestId")
-          chunks += 1
-          if (limits.maxChunkCount != 0 && chunks > limits.maxChunkCount)
-            throw new FramingViolation(s"message exceeds MaxChunkCount=${limits.maxChunkCount}")
-          val payloadEnd = sigOff - padTotal
-          fin match {
-            case 'A' =>
-              throw decodeError(java.util.Arrays.copyOfRange(plainFull, 24, payloadEnd))
-            case 'C' | 'F' =>
-              body.write(plainFull, 24, payloadEnd - 24)
-              if (limits.maxMessageSize != 0 && body.size() > limits.maxMessageSize)
-                throw new FramingViolation(s"message exceeds MaxMessageSize=${limits.maxMessageSize}")
-              if (fin == 'F') return (requestId, body.toByteArray)
-            case other => throw new FramingViolation(s"IsFinal byte '$other'")
-          }
-        case other => throw new FramingViolation(s"unexpected message type '$other'")
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Constant-time MAC compare (java.security.MessageDigest.isEqual over
-    * an offset view).
-    */
-  private def MessageDigestIsEqual(expect: Array[Byte], data: Array[Byte], off: Int): Boolean =
-    java.security.MessageDigest.isEqual(expect,
-      java.util.Arrays.copyOfRange(data, off, off + expect.length))
-
-  // --------------------------------------------------- client handshake
-
-  /** A secured client channel: the plaintext channel state plus the
-    * security mode and the derived symmetric key sets. The client sends
-    * with `keys.clientKeys` and verifies/decrypts with
-    * `keys.serverKeys`; `prevServerKeys` stays accepted while the server
-    * may still answer under the pre-renewal token (Part 6 §6.7.4).
-    */
-  final case class SecureClientChannel(channel: ClientChannel, setup: SecuritySetup,
-                                       keys: ChannelKeys,
-                                       prevToken: Option[(Long, DirectionKeys)]) {
-    def serverKeysFor(tokenId: Long): Option[DirectionKeys] =
-      if (tokenId == channel.token.tokenId) Some(keys.serverKeys)
-      else prevToken.collect { case (t, k) if t == tokenId => k }
-  }
-
-  /** HEL → ACK → secured OPN(Issue): the Basic256Sha256 mirror of
-    * [[OpcuaFraming.openClientChannel]].
-    */
-  def openSecureClientChannel(in: InputStream, out: OutputStream, limits: Limits,
-                              endpointUrl: String, epochMillis: Long,
-                              setup: SecuritySetup,
-                              requestedLifetimeMs: Long = 3600000L,
-                              rng: SecureRandom = new SecureRandom()): SecureClientChannel = {
-    writeFrame(out, "HEL", 'F', encodeHello(Hello(ProtocolVersion, limits, endpointUrl)))
-    out.flush()
-    val negotiated = readFrame(in, limits.receiveBufferSize) match {
-      case ("ACK", _, body) => decodeAck(body)
-      case ("ERR", _, body) => throw decodeError(body)
-      case (t, _, _) => throw new FramingViolation(s"expected ACK, got $t")
-    }
-    val sendSeq = new SeqState
-    val recvSeq = new SeqState
-    val clientNonce = newNonce(rng)
-    writeSecuredOpenRequest(out, sendSeq, requestId = 1L, epochMillis, requestedLifetimeMs,
-      setup.mode, setup.local, setup.serverCertDer, clientNonce)
-    val (token, serverNonce) = readSecuredOpenResponse(in, recvSeq, setup.local,
-      setup.serverCertDer, limits.receiveBufferSize)
-    SecureClientChannel(
-      ClientChannel(negotiated, token.copy(createdAtMillis = epochMillis), sendSeq, recvSeq),
-      setup, deriveChannelKeys(clientNonce, serverNonce), prevToken = None)
-  }
-
-  /** Secured OPN(Renew) on the live channel: fresh nonces, fresh keys
-    * bound to the new token; the old server keys are retained for the
-    * §6.7.4 grace window.
-    */
-  def renewSecureChannel(in: InputStream, out: OutputStream, sc: SecureClientChannel,
-                         requestId: Long, epochMillis: Long,
-                         requestedLifetimeMs: Long = 3600000L,
-                         rng: SecureRandom = new SecureRandom()): SecureClientChannel = {
-    val clientNonce = newNonce(rng)
-    writeSecuredOpenRequest(out, sc.channel.sendSeq, requestId, epochMillis,
-      requestedLifetimeMs, sc.setup.mode, sc.setup.local, sc.setup.serverCertDer, clientNonce,
-      channelId = sc.channel.token.channelId, requestType = RequestTypeRenew)
-    val (renewed, serverNonce) = readSecuredOpenResponse(in, sc.channel.recvSeq, sc.setup.local,
-      sc.setup.serverCertDer, sc.channel.readLimits.receiveBufferSize)
-    if (renewed.channelId != sc.channel.token.channelId)
-      throw new FramingViolation(
-        s"renew answered on channel ${renewed.channelId}, expected ${sc.channel.token.channelId}")
-    SecureClientChannel(
-      sc.channel.copy(token = renewed.copy(createdAtMillis = epochMillis)),
-      sc.setup, deriveChannelKeys(clientNonce, serverNonce),
-      prevToken = Some((sc.channel.token.tokenId, sc.keys.serverKeys)))
-  }
+                             allowOpn: Boolean): (Long, Array[Byte]) =
+    readConversation(in, seq, limits, channelId, keysFor(_).map(new SymmetricSeal(mode, _)),
+      allowOpn)
 }

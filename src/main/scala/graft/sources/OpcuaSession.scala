@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.{InputStream, OutputStream}
 import OpcuaFraming._
 
 /** OPC UA Part 4 session + subscription services in Part 6 binary over
@@ -103,10 +102,10 @@ object OpcuaSession {
   val NodeClassVariable = 2L
 
   // the rest of the MessageSecurityMode enum + the URIs discovery serves
-  // (SecurityModeNone / SecurityPolicyNoneUri live in OpcuaFraming — the
-  // OPN path defines them; redefining here would let the copies diverge)
-  val SecurityModeSignAndEncrypt = 3L
-  val SecurityPolicyBasic256Sha256Uri = "http://opcfoundation.org/UA/SecurityPolicy#Basic256Sha256"
+  // (the policies define them — OpcuaFraming None, OpcuaCrypto
+  // Basic256Sha256 — and copies here could diverge)
+  val SecurityModeSignAndEncrypt: Long = OpcuaCrypto.SecurityModeSignAndEncrypt
+  val SecurityPolicyBasic256Sha256Uri: String = OpcuaCrypto.Basic256Sha256Uri
   val TransportProfileBinaryUri = "http://opcfoundation.org/UA-Profile/Transport/uatcp-uasc-uabinary"
   val UserTokenTypeAnonymous = 0L
 
@@ -315,23 +314,6 @@ object OpcuaSession {
     val cls = r.u32()
     val typeDef = readExpandedNodeId(r)
     BrowseRef(refType, fwd, target, bns, bname, display, cls, typeDef)
-  }
-
-  private def writeByteString(w: BufWriter, b: Array[Byte]): Unit =
-    if (b == null) w.i32(-1) else { w.i32(b.length); w.raw(b) }
-
-  private def readByteString(r: BufReader): Array[Byte] = {
-    val len = r.i32()
-    if (len < 0) null
-    else {
-      // bound BEFORE allocating: a hostile length (e.g. Int.MaxValue)
-      // must answer a FramingViolation, not a 2 GB allocation attempt
-      if (len > r.remaining)
-        throw new FramingViolation(s"ByteString length $len exceeds body remainder ${r.remaining}")
-      val b = new Array[Byte](len)
-      var i = 0; while (i < len) { b(i) = r.u8().toByte; i += 1 }
-      b
-    }
   }
 
   private def writeResponseHeader(w: BufWriter, epochMillis: Long, handle: Long,
@@ -1021,8 +1003,6 @@ object OpcuaSession {
                             security: Option[OpcuaSecure.SecuritySetup] = None)
       extends AutoCloseable {
     private val sock = new java.net.Socket()
-    private val limits = DefaultLimits
-    private var requestId = 1L // the OPN consumed RequestId 1
     private var authToken: NodeIdT = NodeIdT.Null
     // password-encryption material from the CreateSession response
     private var serverNonce: Array[Byte] = Array.emptyByteArray
@@ -1032,86 +1012,32 @@ object OpcuaSession {
     // throws leaves no object for callers to close, so the socket must be
     // released HERE on any handshake failure — otherwise each failed
     // construction leaks a connected socket.
-    private val (in, out) =
-      try {
-        sock.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
-        sock.setSoTimeout(timeoutMs)
-        val i = new java.io.BufferedInputStream(sock.getInputStream, 1 << 16)
-        val o = new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16)
-        (i, o)
-      } catch {
-        case e: Throwable =>
-          try sock.close() catch { case _: Exception => () }
-          throw e
-      }
-    // in secured mode the symmetric key state rides beside the channel
-    private var secChannel: Option[OpcuaSecure.SecureClientChannel] = None
-    private var channel =
-      try security match {
-        case Some(setup) =>
-          val sc = OpcuaSecure.openSecureClientChannel(in, out, limits,
-            s"opc.tcp://$host:$port/graft", System.currentTimeMillis(), setup,
-            requestedLifetimeMs)
-          secChannel = Some(sc)
-          sc.channel
-        case None =>
-          openClientChannel(in, out, limits, s"opc.tcp://$host:$port/graft",
-            System.currentTimeMillis(), requestedLifetimeMs)
-      }
+    private val conv =
+      try ClientConversation.connect(sock, host, port, timeoutMs, DefaultLimits,
+        OpcuaSecure.SecuritySetup.policyOf(security), requestedLifetimeMs)
       catch {
         case e: Throwable =>
           try sock.close() catch { case _: Exception => () }
           throw e
       }
 
+    /** The RequestId of the request being encoded. */
+    private def requestId: Long = conv.requestId
+
     /** The live security token id (renewal bumps it). */
-    def tokenId: Long = channel.token.tokenId
+    def tokenId: Long = conv.channel.token.tokenId
 
     /** One OPN(Renew) round-trip, swapping in the fresh token. [[call]]
       * triggers this automatically at 75% of the token lifetime.
       */
-    def renewNow(): Unit = {
-      requestId += 1
-      secChannel match {
-        case Some(sc) =>
-          val renewed = OpcuaSecure.renewSecureChannel(in, out, sc, requestId,
-            System.currentTimeMillis(), requestedLifetimeMs)
-          secChannel = Some(renewed)
-          channel = renewed.channel
-        case None =>
-          channel = renewChannel(in, out, channel, requestId,
-            System.currentTimeMillis(), requestedLifetimeMs)
-      }
-    }
+    def renewNow(): Unit = conv.renew()
 
     private def call(encodeBody: BufWriter => Unit): BufReader = {
-      if (shouldRenew(channel.token, System.currentTimeMillis())) renewNow()
-      requestId += 1
-      val mw: ChunkSink = secChannel match {
-        case Some(sc) =>
-          new OpcuaSecure.SecureMessageWriter(out, channel.sendSeq, requestId,
-            channel.negotiated.receiveBufferSize, channel.negotiated.maxChunkCount,
-            channel.token.channelId, channel.token.tokenId,
-            sc.setup.mode, sc.keys.clientKeys)
-        case None =>
-          new MessageWriter(out, channel.sendSeq, requestId,
-            channel.negotiated.receiveBufferSize, channel.negotiated.maxChunkCount,
-            channel.token.channelId, channel.token.tokenId)
+      val body = conv.call { mw =>
+        val w = new BufWriter(256)
+        encodeBody(w)
+        mw.raw(w.result())
       }
-      val w = new BufWriter(256)
-      encodeBody(w)
-      mw.raw(w.result()); mw.finish()
-      val (rid, body) = secChannel match {
-        case Some(sc) =>
-          OpcuaSecure.readSecureConversation(in, channel.recvSeq, channel.readLimits,
-            channel.token.channelId, sc.setup.mode, sc.serverKeysFor, allowOpn = false)
-        case None =>
-          readMessage(in, channel.recvSeq, channel.readLimits,
-            channel.token.channelId, channel.token.tokenId)
-      }
-      if (rid != requestId) // a desynced stream must fail loudly, never
-        throw new FramingViolation( // decode another request's response
-          s"response for request $rid, expected $requestId")
       val r = new BufReader(body)
       val typeId = readNodeIdT(r).numeric.toInt
       val (_, status) = readResponseHeader(r)
@@ -1552,11 +1478,7 @@ object OpcuaSession {
     }
 
     override def close(): Unit = {
-      try {
-        requestId += 1
-        writeCloseRequest(out, channel.token, channel.sendSeq, requestId,
-          System.currentTimeMillis())
-      } catch { case _: Exception => () }
+      conv.close()
       try sock.close() catch { case _: Exception => () }
     }
   }

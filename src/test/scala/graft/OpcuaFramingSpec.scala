@@ -197,7 +197,7 @@ class OpcuaFramingSpec extends AnyFunSuite {
     val token = ChannelToken(channelId = 7L, tokenId = 3L,
       createdAtMillis = 1704067200000L, lifetimeMs = 60000L)
     writeOpenResponse(out, new SeqState, 1L, 1704067200000L, token)
-    val back = readOpenResponse(new ByteArrayInputStream(out.toByteArray), new SeqState, 65536)
+    val (back, _) = readOpenResponse(new ByteArrayInputStream(out.toByteArray), new SeqState, 65536)
     assert(back == token)
     // a chunk stamped with a stale/foreign token fails loudly
     val msg = new ByteArrayOutputStream()

@@ -63,9 +63,10 @@ class OpcuaSecureSpec extends AnyFunSuite {
     val out = new java.io.ByteArrayOutputStream()
     val sendSeq = new SeqState
     val nonce = newNonce()
-    writeSecuredOpenRequest(out, sendSeq, requestId = 1L, epochMillis = 1700000000000L,
-      requestedLifetimeMs = 600000L, mode = SecurityModeSignAndEncrypt,
-      local = clientIdent, remoteCertDer = serverIdent.certDer, clientNonce = nonce)
+    writeOpenRequest(out, sendSeq, requestId = 1L, epochMillis = 1700000000000L,
+      requestedLifetimeMs = 600000L,
+      policy = SecuritySetup(SecurityModeSignAndEncrypt, clientIdent, serverIdent.certDer).policy,
+      clientNonce = nonce)
     val frame = out.toByteArray
     // wire: the nonce and the service struct must NOT be plaintext-visible
     assert(indexOfSlice(frame, nonce) < 0, "client nonce leaked in plaintext")
@@ -74,9 +75,9 @@ class OpcuaSecureSpec extends AnyFunSuite {
     val (tpe, fin, body) = readFrame(in, 65536)
     assert(tpe == "OPN" && fin == 'F')
     val recvSeq = new SeqState
-    val opn = readSecuredOpnChunk(body, recvSeq, serverIdent)
-    assert(opn.senderCertDer.sameElements(clientIdent.certDer))
-    val (handle, req, gotNonce) = parseSecuredOpenRequest(opn)
+    val (handle, req) = parseOpenRequest(body, recvSeq, Basic256Sha256(0L, serverIdent, null))
+    assert(req.senderCertDer.sameElements(clientIdent.certDer))
+    val gotNonce = req.clientNonce
     assert(handle == 1L)
     assert(req.requestType == RequestTypeIssue)
     assert(req.securityMode == SecurityModeSignAndEncrypt)
@@ -86,8 +87,9 @@ class OpcuaSecureSpec extends AnyFunSuite {
 
   test("secured OPN rejects tampering, wrong receiver, and foreign server certs") {
     val out = new java.io.ByteArrayOutputStream()
-    writeSecuredOpenRequest(out, new SeqState, 1L, 1700000000000L, 600000L,
-      SecurityModeSign, clientIdent, serverIdent.certDer, newNonce())
+    writeOpenRequest(out, new SeqState, 1L, 1700000000000L, 600000L,
+      policy = SecuritySetup(SecurityModeSign, clientIdent, serverIdent.certDer).policy,
+      clientNonce = newNonce())
     val frame = out.toByteArray
     val body = java.util.Arrays.copyOfRange(frame, 8, frame.length)
     // flip one byte in the encrypted region → OAEP or signature failure
@@ -102,13 +104,13 @@ class OpcuaSecureSpec extends AnyFunSuite {
     // discovered endpoint certificate is refused even though it verifies
     val rout = new java.io.ByteArrayOutputStream()
     val token = ChannelToken(7L, 1L, 1700000000000L, 600000L)
-    writeSecuredOpenResponse(rout, new SeqState, 1L, 1700000000000L, token,
-      local = clientIdent /* imposter signs */, remoteCertDer = serverIdent.certDer,
+    writeOpenResponse(rout, new SeqState, 1L, 1700000000000L, token,
+      policy = Basic256Sha256(SecurityModeSign, clientIdent /* imposter signs */,
+        serverIdent.certDer),
       serverNonce = newNonce())
-    val rbody = java.util.Arrays.copyOfRange(rout.toByteArray, 8, rout.size())
     val e3 = intercept[OpcuaError](
-      parseSecuredOpenResponse(rbody, new SeqState, serverIdent,
-        expectedServerCertDer = serverIdent.certDer))
+      readOpenResponse(new java.io.ByteArrayInputStream(rout.toByteArray), new SeqState, 65536,
+        policy = SecuritySetup(SecurityModeSign, serverIdent, serverIdent.certDer).policy))
     assert(e3.code == BadSecurityChecksFailed)
   }
 
@@ -189,6 +191,40 @@ class OpcuaSecureSpec extends AnyFunSuite {
         _ => Some(keys), allowOpn = false)
     }
     assert(e.code == BadSecurityChecksFailed)
+  }
+
+  /** One RANGE request chunk under fixed keys and ids — the key set of the
+    * derivation test above, channel 5, token 2, sequence 3, request 7.
+    */
+  private def goldenChunk(mode: Long): String = {
+    val keys = deriveChannelKeys(Array.tabulate[Byte](32)(_.toByte),
+      Array.tabulate[Byte](32)(i => (i + 100).toByte))
+    val out = new java.io.ByteArrayOutputStream()
+    val seq = new SeqState
+    seq.next = 3L
+    val mw = new SecureMessageWriter(out, seq, requestId = 7L,
+      peerReceiveBufferSize = 8192, maxChunkCount = 0L,
+      channelId = 5L, tokenId = 2L, mode = mode, sendKeys = keys.clientKeys)
+    mw.u32(3L).i64(10L).i64(20L); mw.finish()
+    out.toByteArray.map(b => f"$b%02x").mkString
+  }
+
+  test("golden Sign MSG chunk: hex-pinned header, plaintext body and HMAC") {
+    // MSG,'F',size 76 | channel 5 | token 2 | seq 3 | request 7 |
+    // u32 3, i64 10, i64 20 in the clear | HMAC-SHA256 over all of it
+    assert(goldenChunk(SecurityModeSign) ==
+      "4d5347464c000000" + "05000000" + "02000000" + "03000000" + "07000000" +
+        "03000000" + "0a00000000000000" + "1400000000000000" +
+        "c63811747d80fbcb9ab298515b4af169805187604673a8c17bddc6f705981680")
+  }
+
+  test("golden SignAndEncrypt MSG chunk: hex-pinned header and AES-CBC region") {
+    // MSG,'F',size 80 | channel 5 | token 2 in the clear; then AES-CBC over
+    // seq/request, the 20-byte body, 4 padding bytes and the HMAC
+    assert(goldenChunk(SecurityModeSignAndEncrypt) ==
+      "4d53474650000000" + "05000000" + "02000000" +
+        "2f9369a746470cf571d883b8ab3eeb79a2f756749cb9f8b05b95108bab2d30a7" +
+        "baf2c1a68694df5cd63a59c0f018a1384ebd1480e0ccb04d31164eb6e734a3d0")
   }
 
   test("SignAndEncrypt: payload NOT visible on the wire; round-trips exactly") {
@@ -288,6 +324,38 @@ class OpcuaSecureSpec extends AnyFunSuite {
         assert(c.tokenId == before + 2)
         assert(c.read(Seq(("dev-2", "m1"))).head.nonEmpty)
       } finally c.close()
+    }
+  }
+
+  test("CLO is sealed like MSG: an unsigned CLO on a SignAndEncrypt channel draws ERR") {
+    withSecureServer { (server, _) =>
+      val policy = SecuritySetup(SecurityModeSignAndEncrypt, clientIdent, serverIdent.certDer).policy
+      def open() = {
+        val sock = new java.net.Socket()
+        sock.connect(new java.net.InetSocketAddress("127.0.0.1", server.boundPort), 5000)
+        sock.setSoTimeout(5000)
+        val in = new java.io.BufferedInputStream(sock.getInputStream)
+        val out = new java.io.BufferedOutputStream(sock.getOutputStream)
+        (sock, in, out, openClientChannel(in, out, DefaultLimits, "opc.tcp://t/graft",
+          System.currentTimeMillis(), policy = policy))
+      }
+      val (sock, in, out, ch) = open()
+      try {
+        val clo = new MessageWriter(out, ch.sendSeq, 2L, ch.negotiated.receiveBufferSize,
+          ch.negotiated.maxChunkCount, ch.token.channelId, ch.token.tokenId,
+          PlainChunks, "CLO")
+        clo.u32(0L); clo.finish()
+        val (tpe, _, body) = readFrame(in, DefaultLimits.receiveBufferSize)
+        assert(tpe == "ERR", s"an unverified CLO must not close the channel quietly, got $tpe")
+        assert(decodeError(body).code == BadSecurityChecksFailed)
+      } finally sock.close()
+      // the same CLO under the channel's seal closes it without a word
+      val (sock2, in2, out2, ch2) = open()
+      try {
+        val clo = ch2.writer(out2, 2L, "CLO")
+        clo.u32(0L); clo.finish()
+        assert(in2.read() == -1)
+      } finally sock2.close()
     }
   }
 
