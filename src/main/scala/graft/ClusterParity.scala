@@ -76,29 +76,6 @@ object ClusterParity {
     "q220_h264_idr_index",        // RDD mapPartitions codec walk
     "q221_gopher_rules")          // pure map-side integer gates
 
-  // ---- tree identity ----
-
-  /** The commit this run certifies, recorded IN the artifact so staleness
-    * is self-evident (r12 verdict #1: PARITY_r12/RESILIENCE_r12 certified
-    * a tree six plan-changing commits behind the HEAD they were cited
-    * for, and nothing in the artifact said so). `+dirty` marks uncommitted
-    * source; "unknown" if git is unavailable rather than failing the run.
-    */
-  def gitTree(): String = {
-    def run(cmd: String*): Option[String] =
-      try {
-        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-        if (p.waitFor() == 0) Some(out) else None
-      } catch { case _: Exception => None }
-    run("git", "rev-parse", "--short=12", "HEAD") match {
-      case Some(h) =>
-        val dirty = run("git", "status", "--porcelain").exists(_.nonEmpty)
-        if (dirty) s"$h+dirty" else h
-      case None => "unknown"
-    }
-  }
-
   // ---- canonical result hashing ----
 
   private def canonDouble(d: Double): String =
@@ -209,18 +186,9 @@ object ClusterParity {
         handle.processAllAvailable()
       } finally handle.stop()
       // read the final table back through the same wire client
-      val c = connect()
-      val st = c.createStatement()
-      val rs = st.executeQuery(
-        "SELECT device, measure_name, tag_value, measure_value, last_updated " +
-          "FROM modvalues ORDER BY device, measure_name")
-      val out = Seq.newBuilder[String]
-      while (rs.next()) out += Seq(
-        rs.getString(1), rs.getString(2),
-        canonDouble(rs.getDouble(3)), canonDouble(rs.getDouble(4)),
-        rs.getString(5)).mkString("\u001F") // same separator contract as `lines`
-      rs.close(); st.close(); c.close()
-      out.result()
+      Harness.readModvalues(connect).map(r => Seq(
+        r.device, r.measure_name, canonDouble(r.tag_value), canonDouble(r.measure_value),
+        r.last_updated).mkString("\u001F")) // same separator contract as `lines`
     }
   }
 
@@ -268,7 +236,7 @@ object ClusterParity {
         s""""hash_cluster":"${c.roundedHash}","equal":$eq,"exact_equal":$exactEq}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"cluster_parity","commit":"${gitTree()}","queries":$qJson,""" +
+      s"""{"metric":"cluster_parity","commit":"${Harness.gitTree()}","queries":$qJson,""" +
         s""""pipeline_rows":${localPipe.size},"pipeline_rows_cluster":${clusterPipe.size},""" +
         s""""pipeline_equal":$pipeEq,"failures":${failures.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""local_sec":$localSec,"cluster_sec":$clusterSec,"sf":"$sfDir"}"""

@@ -3,10 +3,12 @@ package graft
 import java.sql.Connection
 import org.apache.spark.sql.SparkSession
 import graft.control.{PgEphemeral, PgWire}
+import graft.streaming.CurrentValuesSink.ModRow
 import graft.streaming.JdbcUpsert
 
-/** The set-up every harness main shares: one way to build a session and
-  * one ephemeral Postgres `modvalues` fixture.
+/** The set-up every harness main shares: one way to build a session, one
+  * ephemeral Postgres `modvalues` fixture and its read-back, and the
+  * commit an artifact records.
   */
 object Harness {
 
@@ -67,5 +69,39 @@ object Harness {
       JdbcUpsert.bootstrap(connect)
       body(connect, new JdbcUpsert.Target(connect, dialect = JdbcUpsert.Postgres))
     } finally server.stop()
+  }
+
+  /** Every `modvalues` row, ordered by (device, measure_name). */
+  def readModvalues(connect: () => Connection): Seq[ModRow] = {
+    val c = connect()
+    try {
+      val rs = c.createStatement().executeQuery(
+        "SELECT device, measure_name, tag_value, measure_value, last_updated " +
+          "FROM modvalues ORDER BY device, measure_name")
+      val out = Seq.newBuilder[ModRow]
+      while (rs.next()) out += ModRow(
+        rs.getString(1), rs.getString(2), rs.getDouble(3), rs.getDouble(4), rs.getString(5))
+      out.result()
+    } finally c.close()
+  }
+
+  /** The commit an artifact certifies, so staleness is self-evident from
+    * the file alone: the short HEAD hash, `+dirty` when the tree has
+    * uncommitted changes, "unknown" without git rather than failing the
+    * run.
+    */
+  def gitTree(): String = {
+    def run(cmd: String*): Option[String] =
+      try {
+        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+        val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+        if (p.waitFor() == 0) Some(out) else None
+      } catch { case _: Exception => None }
+    run("git", "rev-parse", "--short=12", "HEAD") match {
+      case Some(h) =>
+        val dirty = run("git", "status", "--porcelain").exists(_.nonEmpty)
+        if (dirty) s"$h+dirty" else h
+      case None => "unknown"
+    }
   }
 }

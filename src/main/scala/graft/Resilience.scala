@@ -6,7 +6,7 @@ import scala.jdk.OptionConverters._
 
 /** Executor-death resilience audit (r11 verdict #3) — the missing third
   * leg of the trust triangle: ClusterParity proves multi-JVM correctness
-  * on the HAPPY path, CrashSoak proves whole-pipeline death + checkpoint
+  * on the HAPPY path, Soak proves whole-pipeline death + checkpoint
   * resume, but nothing yet proved the middle case a real cluster hits
   * weekly — ONE executor JVM dies (OOM-killer, preemption, hardware) and
   * the DRIVER survives. That path exercises machinery the other two
@@ -200,18 +200,10 @@ object Resilience {
         input.addData(batch2: _*)
         handle.processAllAvailable()
       } finally handle.stop()
-      val c = connect()
-      val st = c.createStatement()
-      val rs = st.executeQuery(
-        "SELECT device, measure_name, tag_value, measure_value, last_updated " +
-          "FROM modvalues ORDER BY device, measure_name")
-      val out = Seq.newBuilder[String]
-      while (rs.next()) out += Seq(
-        rs.getString(1), rs.getString(2),
-        rs.getDouble(3).toString, rs.getDouble(4).toString,
-        rs.getString(5)).mkString("")
-      rs.close(); st.close(); c.close()
-      (out.result(), kill)
+      val rows = Harness.readModvalues(connect).map(r => Seq(
+        r.device, r.measure_name, r.tag_value.toString, r.measure_value.toString,
+        r.last_updated).mkString("\u001F"))
+      (rows, kill)
     }
   }
 
@@ -257,7 +249,7 @@ object Resilience {
         s""""killed_in_flight":${b.kill.inFlight},"attempts":${b.attempts}}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"resilience","commit":"${ClusterParity.gitTree()}",""" +
+      s"""{"metric":"resilience","commit":"${Harness.gitTree()}",""" +
         s""""master":"local-cluster[2,16,4096]","batch":$bJson,""" +
         s""""streaming":{"rows":${calmRows.size},"rows_disturbed":${killedRows.size},""" +
         s""""equal":$streamEqual,"killed_pid":${streamKill.pid},""" +

@@ -1,63 +1,76 @@
 package graft
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import graft.control.{ControlPlane, ControlPlaneHttp}
 import graft.operators.BrowseJobRegistry
+import graft.operators.CurrentValues.OnlineMeasure
 import graft.operators.DtoMapping.ConnectionDto
 import graft.sources.{FeedTransport, MeasureFeed, MeasureSourceProvider}
-import graft.streaming.{ConfigReload, CurrentValuesSink, IngestPipeline, ServerWatchdog}
+import graft.streaming.{ConfigReload, CurrentValuesSink, FusedPipeline, IngestPipeline, IngestProfile, JdbcUpsert}
 
-/** End-to-end streaming soak (round-7 verdict stretch item): ONE sustained
-  * run composing every individually-spec-green streaming piece —
+/** End-to-end streaming soak: one sustained run of the deployed pipeline
+  * through every fault the reference's service must ride out — config
+  * reloads (`Services/OpcSubscribeService.cs:79-98,419-424`), bad-status
+  * values, a silent server (`:809-957`) and process death.
   *
-  *   config CRUD over real HTTP ([[ControlPlaneHttp]])
-  *     → [[ConfigReload]] stop-and-relaunch (the reference's
-  *       FileSystemWatcher → full resubscribe,
-  *       `Services/OpcSubscribeService.cs:79-98,419-424`)
-  *     → framed-socket OPC UA ingest ([[FeedTransport.FeedServer]], one
-  *       server per configured connection, union of DSv2 socket sources)
-  *     → gates → watermark dedup → value path + liveness state machine
-  *     → a live ephemeral Postgres via the production
-  *       [[graft.streaming.JdbcUpsert.Target]] ([[Harness.withModvalues]]),
-  *       plus the heartbeat and server-watchdog queries —
+  * This main is the supervisor. It owns everything a crash must not
+  * destroy:
+  *   - the user-visible `modvalues` table, a live ephemeral Postgres
+  *     ([[Harness.withModvalues]]);
+  *   - two framed-socket OPC UA feed servers ([[FeedTransport.FeedServer]])
+  *     and their sim clock — the feeds are pure in the sequence number, so
+  *     any offset can be replayed;
+  *   - the config directory behind [[ControlPlaneHttp]], mutated over
+  *     real HTTP;
+  *   - a poller that reads liveness-flag transitions from the database;
+  *   - the final-state oracle and the artifact.
   *
-  * under sustained load for SPARK_GRAFT_SOAK_SECONDS (default 600),
-  * publishing SOAK_r{N}.json with event counts in/out, liveness-flag
-  * transitions (observed by polling the DATABASE, i.e. the user-visible
-  * table, not internals), watchdog silence events, and a final-state
-  * exactness check: every (device, measure) row in Postgres must equal the
-  * last GOOD value the feed ever published for that key, recomputed
-  * driver-side from the feed's pure `at(i)` function.
+  * The pipeline is a child JVM ([[SoakChild]]) that runs as deployed:
+  * [[ConfigReload]] over the config directory → one socket source per
+  * connection → [[IngestPipeline]] (or [[FusedPipeline]]) on the RocksDB
+  * state store, plus production's watchdog and heartbeat queries, all
+  * checkpointed under a digest of the config they loaded. At two seeded
+  * instants the supervisor `kill -9`s the child (no shutdown hooks,
+  * mid-batch, arbitrary JDBC transactions in flight) and starts a new one,
+  * which resumes its own checkpoint.
   *
-  * Timeline (fractions of the run):
+  * Timeline (fractions of SPARK_GRAFT_SOAK_SECONDS, default 600):
   *   15%  POST  /api/client/config/add     — server B joins → relaunch
-  *   30%  devices a-dev-0..9 start emitting bad-status values
+  *   30%  devices a-dev-0..9 emit bad-status values
   *        → liveness 1→0 (reference `:585`: bad status = offline NOW)
   *   40%  bad window ends → liveness 0→1
-  *   50%  server B's clock freezes (silent server; A keeps advancing the
-  *        event-time watermark) → watchdog fires after its 180 s
-  *        event-time window → every b-device marked offline (T3 fan-out)
-  *   70%  B resumes AT A's CLOCK (an OPC UA reconnect backfill: the gap
-  *        rows arrive as one burst, everything older than the dedup
-  *        watermark is dropped by design — DiscardOldest semantics)
+  *   45%  server B's clock freezes (silent server; A keeps advancing the
+  *        event-time watermark) → the watchdog fires once A's events
+  *        pass B's last by its 180 s timeout plus its 180 s watermark
+  *        delay (90 s wall) → every b-device offline (T3 fan-out)
+  *   75%  B resumes AT A's CLOCK (an OPC UA reconnect backfill)
   *   80%  PATCH /api/client/config/update  — innocuous edit → relaunch
-  *   83%  B's clock freezes again (drain before unsubscribe)
+  *   83%  B's clock freezes again; at 87% the supervisor waits (≤ 60 s)
+  *        until every B key in the table holds B's last good value
   *   87%  DELETE /api/client/config/delete/2 → relaunch, A-only; B's
-  *        devices then time out via liveness and finish offline
+  *        devices stay offline after the K3 reset
+  *   kill -9 twice, between the add and the update ([[killInstants]])
   *
   * Sim time runs 4× wall (16 ticks/s × 250 ms/tick), so the 60 s liveness
-  * and 180 s watchdog EVENT-TIME constants elapse in 15/45 wall-seconds
-  * and the whole script fits in ten minutes.
+  * and 180 s watchdog EVENT-TIME constants elapse in 15/45 wall-seconds.
   *
-  * Relaunches use a fresh implicit checkpoint each time (the source SET
-  * changes across reloads, which Structured Streaming checkpoints forbid);
-  * each incarnation therefore re-pulls the feed log from seq 0 and the
-  * idempotent keyed upsert absorbs the replay — `delivered ≥ offered` with
-  * the inflation reported, and exactness is asserted on the FINAL STATE,
-  * the same contract the reference's restart path relies on.
+  * Contract: the FINAL TABLE. Every (device, measure) row equals the last
+  * GOOD value its feed published, replayed by the supervisor from the
+  * feeds' pure `at(i)`; every A device ends online and, on runs long enough for
+  * the event-time windows (≥ 420 s), every B device offline. Row counts
+  * are diagnostics: `delivered` sums the value-sink input over all
+  * incarnations, so a kill's replayed tail inflates it, while a backfill
+  * older than the T6 queue (`queueCapacity`, 1000 ticks per item) is
+  * DiscardOldest-truncated and deflates it.
   */
 object Soak {
 
@@ -91,23 +104,56 @@ object Soak {
     }
   }
 
+  /** The config mutations' instants, as fractions of the run. */
+  val AddAt = 0.15
+  val UpdateAt = 0.80
+  val DeleteAt = 0.87
+
+  /** The two kill -9 instants, in seconds into a run of `durationS`: kill
+    * `i` falls uniformly in [0.20 + 0.275 i, 0.20 + 0.275 (i + 1)) of the
+    * run, so the kills land in the bad-status window and the silent
+    * server. From 300 s on both stay at least 15 s clear of every config
+    * mutation and of the final drain.
+    */
+  def killInstants(seed: Long, durationS: Int): Seq[Double] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until 2).map(i => durationS * (0.20 + 0.275 * (i + rnd.nextDouble())))
+  }
+
+  /** The checkpoint directory a config runs under: a digest of its
+    * connections. A kill -9 resumes the checkpoint of an unchanged config;
+    * any add, update or delete starts a fresh one.
+    */
+  def configDigest(conns: Seq[ConnectionDto]): String = {
+    // as Lists, so the folders' collection type does not name a config
+    val text = conns.sortBy(_.id)
+      .map(c => c.copy(browseExclusionFolders = c.browseExclusionFolders.toList)).mkString("\n")
+    java.security.MessageDigest.getInstance("SHA-256").digest(text.getBytes(UTF_8))
+      .take(8).map("%02x".format(_)).mkString
+  }
+
+  private[graft] val Db = "soak"
+  private[graft] val AesKey = "0123456789abcdef0123456789abcdef"
+  // the ingest mode and freshness profile the child runs (and the artifact records)
+  private[graft] lazy val Pipeline = sys.env.getOrElse("SPARK_GRAFT_SOAK_PIPELINE", "split")
+  private[graft] lazy val Profile = sys.env.getOrElse("SPARK_GRAFT_SOAK_PROFILE", "default")
+
   private final case class TimelineEvent(wallS: Double, event: String)
 
   def main(args: Array[String]): Unit = {
     val durationS = sys.env.getOrElse("SPARK_GRAFT_SOAK_SECONDS", "600").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK_r8.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val killSeed = new java.security.SecureRandom().nextLong()
+    val killAts = killInstants(killSeed, durationS)
     val nDevices = 50
     val nMeasures = 4
     val ticksPerFire = 4L // fired every 250 ms wall → 16 ticks/s = sim 4× wall
 
-    val spark = Harness.session(s"local[$cpus]", cpus.toInt, logLevel = "ERROR")
-
-    // ---- the user-visible modvalues table: a live ephemeral Postgres 15
-    // through the hand-written v3 wire client, written with the
-    // production dialect by concurrent upserts; the fixture stops the
-    // server on every exit path
-    val rc = Harness.withModvalues("soak") { (connect, target) =>
+    // the control plane maps its DTOs through Spark; the pipeline's own
+    // session lives in the child
+    val spark = Harness.session("local[2]", 2, logLevel = "ERROR")
+    val rc = try Harness.withModvalues(Db) { (connect, target) =>
 
     // ---- two framed-socket feed servers ----
     val startMicros = 1704067200000000L
@@ -119,127 +165,36 @@ object Soak {
     val urlB = s"opc.tcp://127.0.0.1:${srvB.boundPort}"
     @volatile var bTicking = true
     @volatile var ticking = true
-    @volatile var tickerPaused = false
     val ticker = new Thread(() => {
       while (ticking) {
         Thread.sleep(250)
-        if (!tickerPaused) {
-          feedA.clockTicks += ticksPerFire
-          if (bTicking) feedB.clockTicks = feedA.clockTicks // resume = jump to now
-        }
+        feedA.clockTicks += ticksPerFire
+        if (bTicking) feedB.clockTicks = feedA.clockTicks // resume = jump to now
       }
     }, "soak-ticker")
     ticker.setDaemon(true)
 
     // ---- control plane over real HTTP ----
-    val configDir = java.nio.file.Files.createTempDirectory("soak-config").toFile
-    val markerDir = java.nio.file.Files.createTempDirectory("soak-markers").toFile
-    val aesKey = "0123456789abcdef0123456789abcdef"
-    val plane = new ControlPlane(spark, configDir, aesKey,
-      new BrowseJobRegistry(markerDir))
+    val configDir = Files.createTempDirectory("soak-config").toFile
+    val markerDir = Files.createTempDirectory("soak-markers").toFile
+    val plane = new ControlPlane(spark, configDir, AesKey, new BrowseJobRegistry(markerDir))
     plane.add(ConnectionDto(1, urlA, "user", "pw", 5000, 100, Seq.empty))
     val http = new ControlPlaneHttp(plane).start()
     val httpBase = s"http://127.0.0.1:${http.boundPort}"
     val client = java.net.http.HttpClient.newHttpClient()
     def httpCall(method: String, path: String, body: Option[String]): Int = {
-      val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"$httpBase$path"))
-      val withBody = body match {
-        case Some(j) => b.method(method,
-          java.net.http.HttpRequest.BodyPublishers.ofString(j))
-        case None => b.method(method, java.net.http.HttpRequest.BodyPublishers.noBody())
-      }
-      client.send(withBody.build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+      import java.net.http.HttpRequest.BodyPublishers
+      val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"$httpBase$path"))
+        .method(method, body.map(j => BodyPublishers.ofString(j)).getOrElse(BodyPublishers.noBody()))
+      client.send(req.build(), java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
     }
+    def dtoJson(id: Int, url: String, timeoutMs: Int): String =
+      s"""{"id":$id,"url":"$url","username":"user","password":"pw","timeoutMs":$timeoutMs,"maxSearch":100,"browseExclusionFolders":[]}"""
 
-    // ---- accounting ----
-    val delivered = new AtomicLong(0L)
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      // a writer that dies mid-soak must say so in the log: the first pg
-      // run failed silently (task-serialization) and only the final-state
-      // check exposed it — 600 s later
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        e.exception.foreach(msg =>
-          println(s"[soak] QUERY DIED: ${e.runId} -> ${msg.take(400)}"))
-      override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == "graft-values") delivered.addAndGet(e.progress.numInputRows)
-    })
-    val relaunches = new AtomicInteger(-1) // first launch is not a RE-launch
-    val silenceEvents = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val timeline = new java.util.concurrent.ConcurrentLinkedQueue[TimelineEvent]()
+    val timeline = new ConcurrentLinkedQueue[TimelineEvent]()
     val t0 = System.nanoTime()
     def wallS: Double = (System.nanoTime() - t0) / 1e9
     def mark(ev: String): Unit = { timeline.add(TimelineEvent(wallS, ev)); println(f"[soak] $wallS%6.1f s  $ev") }
-
-    // device dim for the watchdog fan-out (all devices of both servers)
-    import spark.implicits._
-    val deviceDim = ((0 until nDevices).map(i => (s"a-dev-$i", urlA)) ++
-      (0 until nDevices).map(i => (s"b-dev-$i", urlB))).toDF("device", "server")
-
-    // ---- launch: read config, open one socket source per connection ----
-    val handleRef = new AtomicReference[IngestPipeline.Handle]()
-    val watchdogRef = new AtomicReference[StreamingQuery]()
-    def launch(): StreamingQuery = {
-      Option(handleRef.get()).foreach(_.stop())
-      Option(watchdogRef.get()).foreach(_.stop())
-      relaunches.incrementAndGet()
-      // The reference's resubscribe path bulk-resets EVERY myPV_online flag
-      // to 0 on a config change and lets live values re-online the devices
-      // that are still configured ("also works for devices perhaps not in
-      // the new config and still set online from last time but actually no
-      // longer online", `Services/OpcSubscribeService.cs:257-259`; per-server
-      // MarkRowsAsOffline at `:961,993`). Without it a deleted server's
-      // devices stay online forever — the fresh incarnation's liveness state
-      // machine never sees their keys, so no timeout can fire.
-      target.offlineReset(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-        .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now()))
-      mark(s"launch: ${plane.list().map(_.url).mkString(", ")}")
-      val raws = plane.list().map { conn =>
-        val uri = java.net.URI.create(conn.url)
-        spark.readStream.format(classOf[MeasureSourceProvider].getName)
-          .option("nDevices", nDevices).option("nMeasures", nMeasures)
-          .option("numPartitions", 2)
-          .option("feedHost", uri.getHost).option("feedPort", uri.getPort)
-          .option("chunkRows", 65536L)
-          // live cadence is 16 ticks/s against 1 s triggers: the default
-          // 10-tick T6 queue would DiscardOldest on every live trigger.
-          // 1000 ticks keeps the live path lossless while still capping
-          // relaunch replay bursts (the reconnect-backfill semantic).
-          .option("queueCapacity", 1000L)
-          .load()
-      }
-      val raw = raws.reduce(_ union _)
-      val handle = IngestPipeline.start(raw, target,
-        trigger = Trigger.ProcessingTime("1 second"))
-      handleRef.set(handle)
-      // T3: server-silence watchdog over the same union, silence events
-      // fan out to per-device offline rows through the production join
-      val withServer = raw.withColumn("server",
-        when(col("device").startsWith("a-"), lit(urlA)).otherwise(lit(urlB)))
-      val wd = ServerWatchdog.silenceEvents(withServer)
-        .writeStream.outputMode("append").trigger(Trigger.ProcessingTime("1 second"))
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[ServerWatchdog.SilenceEvent], _: Long) =>
-          val events = batch.collect() // per-SERVER granularity: ≤2 rows
-          events.foreach { e =>
-            silenceEvents.add(s"${e.server}@${e.silent_since}")
-            mark(s"watchdog silence: ${e.server} (since ${e.silent_since})")
-          }
-          if (events.nonEmpty) {
-            val rows = ServerWatchdog.offlineRows(batch.toDF(), deviceDim)
-              .select(col("device"), col("measure_name"),
-                col("online").as("tag_value"), col("online").as("measure_value"),
-                graft.functions.ScalarOps.lastUpdatedString(col("silent_since")).as("last_updated"))
-              .as[CurrentValuesSink.ModRow]
-            rows.foreachPartition(
-              (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
-          }
-        }
-        .queryName("graft-watchdog").start()
-      watchdogRef.set(wd)
-      handle.valueQuery
-    }
 
     // K1/K3 bootstrap: seed all keys + online rows, zero the flags
     val allPoints = for {
@@ -247,27 +202,62 @@ object Soak {
     } yield (s"$p$i", s"m$m")
     CurrentValuesSink.seedAndReset(allPoints, "1970-01-01T00:00:00.000000", target)
 
+    // ---- the child pipeline JVM ----
+    val ckptRoot = Files.createTempDirectory("soak-ckpt").toFile
+    val stopFile = new File(ckptRoot, "STOP")
+    // the child's temp files: a kill -9 skips the hooks that delete them
+    val childTmp = new File(ckptRoot, "tmp")
+    childTmp.mkdirs()
+    // the last progress line of each incarnation, summed at the end. A
+    // killed child's pump can still be draining buffered stdout while the
+    // next incarnation's pump writes, hence the concurrent maps.
+    val deliveredPerInc = TrieMap.empty[Int, Long]
+    val silencesPerInc = TrieMap.empty[Int, Long]
+    val launches = new AtomicInteger(0)
+    val childExits = mutable.ArrayBuffer.empty[(Int, Int)] // (incarnation, exit code)
+    val ProgressLine = """\[child\] delivered=(\d+) silence_events=(\d+)""".r
+    val javaBin = new File(new File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
+
+    def spawn(incarnation: Int): Process = {
+      val cmd = Seq(javaBin) ++ Harness.AddOpens ++ Seq(
+        "-Xmx6g", s"-Djava.io.tmpdir=$childTmp", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+        "-cp", System.getProperty("java.class.path"), "graft.SoakChild",
+        connect.port.toString, configDir.getPath, ckptRoot.getPath,
+        nDevices.toString, nMeasures.toString, incarnation.toString,
+        "a-dev-", urlA, "b-dev-", urlB)
+      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+      mark(s"child $incarnation spawned (pid ${p.pid()})")
+      val pump = new Thread(() => {
+        val out = new java.io.BufferedReader(new java.io.InputStreamReader(p.getInputStream))
+        out.lines().forEach(line => line match {
+          case ProgressLine(d, s) =>
+            deliveredPerInc(incarnation) = d.toLong
+            if (s.toLong > silencesPerInc.getOrElse(incarnation, 0L))
+              mark(s"inc$incarnation watchdog silence event ($s in this incarnation)")
+            silencesPerInc(incarnation) = s.toLong
+          case line if line.startsWith("[child]") =>
+            if (line.startsWith("[child] launch")) launches.incrementAndGet()
+            mark(s"inc$incarnation ${line.stripPrefix("[child]").trim.take(160)}")
+          case _ => ()
+        })
+      }, s"child-$incarnation-pump")
+      pump.setDaemon(true); pump.start()
+      p
+    }
+
     ticker.start()
-    val reload = ConfigReload.watch(configDir)(() => launch())
-    val heartbeat = IngestPipeline.heartbeatQuery(spark, target,
-      Trigger.ProcessingTime("60 seconds"))
+    var incarnation = 0
+    var child = spawn(incarnation)
+    sys.addShutdownHook(child.destroyForcibly())
 
     // ---- liveness observer: poll the DATABASE for flag transitions ----
     val offlineTransitions = new AtomicLong(0L)
     val onlineTransitions = new AtomicLong(0L)
-    val lastFlags = mutable.Map.empty[String, Double]
     @volatile var polling = true
-    def onlineFlags(): Map[String, Double] = {
-      val c = connect()
-      try {
-        val rs = c.createStatement().executeQuery(
-          "SELECT device, measure_value FROM modvalues WHERE measure_name = 'myPV_online'")
-        val m = mutable.Map.empty[String, Double]
-        while (rs.next()) m(rs.getString(1)) = rs.getDouble(2)
-        m.toMap
-      } finally c.close()
-    }
+    def onlineFlags(): Map[String, Double] = Harness.readModvalues(connect)
+      .collect { case r if r.measure_name == OnlineMeasure => r.device -> r.measure_value }.toMap
     val poller = new Thread(() => {
+      var lastFlags = Map.empty[String, Double]
       while (polling) {
         Thread.sleep(3000)
         try {
@@ -280,142 +270,266 @@ object Soak {
                 mark(s"liveness $d: $prev -> $f")
               case _ => ()
             }
-            lastFlags(d) = f
           }
-        } catch { case _: Exception => () } // poll races a relaunch: retry next tick
+          lastFlags = now
+        } catch { case _: Exception => () } // a failed poll retries next tick
       }
     }, "soak-poller")
     poller.setDaemon(true)
     poller.start()
 
+    // ---- the final-state oracle: last GOOD value per key, replayed from at(i) ----
+    def lastGood(feed: SoakFeed): Map[(String, String), Double] = {
+      val perTick = nDevices.toLong * nMeasures
+      val lastTick = feed.clockTicks - 1
+      (for (d <- 0 until nDevices; m <- 0 until nMeasures) yield (d, m)).flatMap { case (d, m) =>
+        (lastTick to math.max(0L, lastTick - 200L) by -1L).iterator
+          .map(t => feed.at(t * perTick + d.toLong * nMeasures + m))
+          .collectFirst { case (dev, mm, v, _, true) => ((dev, mm), v) }
+      }.toMap
+    }
+    def mismatches(expected: Map[(String, String), Double]): Seq[String] = {
+      val actual = Harness.readModvalues(connect).map(r => (r.device, r.measure_name) -> r.tag_value).toMap
+      expected.toSeq.sorted.flatMap { case (k, exp) =>
+        actual.get(k) match {
+          case Some(act) if math.abs(act - exp) < 1e-3 => None // REAL column: float32
+          case other => Some(s"${k._1}/${k._2}: expected $exp got $other")
+        }
+      }
+    }
+
     // ---- the script ----
-    def at(frac: Double)(body: => Unit): Unit = {
-      val targetS = durationS * frac
-      val sleepMs = ((targetS - wallS) * 1000).toLong
-      if (sleepMs > 0) Thread.sleep(sleepMs)
-      body
+    def sleepUntil(s: Double): Unit = {
+      val ms = ((s - wallS) * 1000).toLong
+      if (ms > 0) Thread.sleep(ms)
+    }
+    def killChild(): Unit = {
+      mark(s"kill -9 child $incarnation (delivered so far: ${deliveredPerInc.getOrElse(incarnation, 0L)})")
+      // record the REAL exit code: a child that died on its own before the
+      // kill must not read as a kill -9 (137) in the artifact
+      if (!child.isAlive) mark(s"child $incarnation was ALREADY DEAD (exit ${child.exitValue()})")
+      child.destroyForcibly()
+      child.waitFor()
+      childExits += incarnation -> child.exitValue()
+      incarnation += 1
+      child = spawn(incarnation)
     }
     val mutations = mutable.Map.empty[String, Int]
-    at(0.15) {
-      val dto = s"""{"id":2,"url":"$urlB","username":"user","password":"pw","timeoutMs":5000,"maxSearch":100,"browseExclusionFolders":[]}"""
-      mutations("add") = httpCall("POST", "/api/client/config/add", Some(dto))
-      mark(s"HTTP add server B -> ${mutations("add")}")
-    }
-    at(0.30) { feedA.badBelow = 10; mark("a-dev-0..9 now bad-status") }
-    at(0.40) { feedA.badBelow = 0; mark("a-dev bad window over") }
-    at(0.50) { bTicking = false; mark("server B clock frozen (silence)") }
-    at(0.70) { bTicking = true; mark("server B resumed at live clock") }
-    at(0.80) {
-      val dto = s"""{"id":1,"url":"$urlA","username":"user","password":"pw","timeoutMs":9000,"maxSearch":100,"browseExclusionFolders":[]}"""
-      mutations("update") = httpCall("PATCH", "/api/client/config/update", Some(dto))
-      mark(s"HTTP update server A -> ${mutations("update")}")
-    }
-    at(0.83) { bTicking = false; mark("server B clock frozen (drain before delete)") }
-    // processAllAvailable never returns while the ticker keeps minting new
-    // offsets (the 120 s smoke run hung exactly there), so every drain
-    // freezes the clock first AND runs on a bounded side thread — a drain
-    // that can't finish must surface as final-state mismatches in the
-    // artifact, not as a run that never writes one.
-    def drainBounded(maxMs: Long): Boolean = {
-      val t = new Thread(() => {
-        try Option(handleRef.get()).foreach(_.processAllAvailable())
-        catch { case _: Exception => () }
-      }, "soak-drain")
-      t.setDaemon(true); t.start(); t.join(maxMs)
-      !t.isAlive
-    }
-    at(0.87) {
-      // quiesce before unsubscribing B: drain the current incarnation to
-      // the feeds' latest so B's tail is committed (the operator's
-      // unsubscribe discipline; without it the delete races B's last rows)
-      tickerPaused = true
-      Thread.sleep(300) // let the in-flight tick land before draining
-      val drained = drainBounded(60000)
-      mutations("delete") = httpCall("DELETE", "/api/client/config/delete/2", None)
-      mark(s"HTTP delete server B -> ${mutations("delete")} (pre-delete drain ${if (drained) "complete" else "TIMED OUT"})")
-      tickerPaused = false
-    }
-    at(1.0) { mark("script complete; draining") }
+    val script: Seq[(Double, () => Unit)] = Seq(
+      AddAt -> { () =>
+        mutations("add") = httpCall("POST", "/api/client/config/add", Some(dtoJson(2, urlB, 5000)))
+        mark(s"HTTP add server B -> ${mutations("add")}")
+      },
+      0.30 -> { () => feedA.badBelow = 10; mark("a-dev-0..9 now bad-status") },
+      0.40 -> { () => feedA.badBelow = 0; mark("a-dev bad window over") },
+      0.45 -> { () => bTicking = false; mark("server B clock frozen (silence)") },
+      0.75 -> { () => bTicking = true; mark("server B resumed at live clock") },
+      UpdateAt -> { () =>
+        mutations("update") = httpCall("PATCH", "/api/client/config/update", Some(dtoJson(1, urlA, 9000)))
+        mark(s"HTTP update server A -> ${mutations("update")}")
+      },
+      0.83 -> { () => bTicking = false; mark("server B clock frozen (drain before delete)") },
+      DeleteAt -> { () =>
+        // unsubscribe discipline: B's tail must be in the table before B
+        // leaves the config, or the delete races B's last rows
+        val expectedB = lastGood(feedB)
+        val deadline = wallS + 60
+        var behind = mismatches(expectedB)
+        while (behind.nonEmpty && wallS < deadline) { Thread.sleep(1000); behind = mismatches(expectedB) }
+        mutations("delete") = httpCall("DELETE", "/api/client/config/delete/2", None)
+        mark(s"HTTP delete server B -> ${mutations("delete")} (pre-delete drain " +
+          (if (behind.isEmpty) "complete)" else s"TIMED OUT at 60 s, ${behind.size} B keys behind)"))
+      }
+    ).map { case (frac, step) => (durationS * frac, step) } ++ killAts.map(_ -> (() => killChild()))
+    script.sortBy(_._1).foreach { case (atS, step) => sleepUntil(atS); step() }
+    sleepUntil(durationS)
 
-    // ---- drain + final state ----
+    // ---- stop the clock, let the child drain and exit ----
     ticking = false
     Thread.sleep(1500)
     val offeredA = feedA.latest()
     val offeredB = feedB.latest()
-    if (!drainBounded(120000)) mark("final drain TIMED OUT at 120 s")
-    Thread.sleep(2000) // let the last foreachBatch upserts commit
+    mark(s"script complete; clock stopped at ${feedA.clockTicks} ticks; requesting drain")
+    Files.write(stopFile.toPath, "stop".getBytes(UTF_8))
+    if (!child.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)) {
+      mark("child drain TIMED OUT at 180 s; killing")
+      child.destroyForcibly(); child.waitFor()
+    }
+    childExits += incarnation -> child.exitValue()
+    mark(s"child $incarnation exited ${child.exitValue()}")
     polling = false
-    locally { val f = onlineFlags(); f.foreach { case (d, v) => lastFlags(d) = v } }
-    reload.close()
-    Option(watchdogRef.get()).foreach(_.stop())
-    Option(handleRef.get()).foreach(_.stop())
-    heartbeat.stop()
+    poller.join() // its last poll must not race the final read
     http.stop()
-
-    // final-state oracle: last GOOD value per key, replayed from at(i)
-    def expectedFinal(feed: SoakFeed, prefix: String): Map[(String, String), Double] = {
-      val perTick = nDevices.toLong * nMeasures
-      val pairs = for (d <- 0 until nDevices; m <- 0 until nMeasures) yield (d, m)
-      pairs.flatMap { case (d, m) =>
-        val lastTick = feed.clockTicks - 1
-        val found = (lastTick to math.max(0L, lastTick - 200L) by -1L).iterator
-          .map(t => feed.at(t * perTick + d.toLong * nMeasures + m))
-          .collectFirst { case (dev, mm, v, _, true) => ((dev, mm), v) }
-        found
-      }.toMap
-    }
-    val expected = expectedFinal(feedA, "a-dev-") ++ expectedFinal(feedB, "b-dev-")
-    val actual: Map[(String, String), Double] = {
-      val c = connect()
-      try {
-        val rs = c.createStatement().executeQuery(
-          "SELECT device, measure_name, tag_value FROM modvalues WHERE measure_name <> 'myPV_online'")
-        val m = mutable.Map.empty[(String, String), Double]
-        while (rs.next()) m((rs.getString(1), rs.getString(2))) = rs.getDouble(3)
-        m.toMap
-      } finally c.close()
-    }
-    val mismatches = expected.toSeq.flatMap { case (k, exp) =>
-      actual.get(k) match {
-        case Some(act) if math.abs(act - exp) < 1e-3 => None // REAL column: float32
-        case other => Some(s"${k._1}/${k._2}: expected $exp got $other")
-      }
-    }
-    val aOnline = lastFlags.count { case (d, f) => d.startsWith("a-") && f == 1.0 }
-    val bOffline = lastFlags.count { case (d, f) => d.startsWith("b-") && f == 0.0 }
     srvA.close(); srvB.close()
 
+    val expected = lastGood(feedA) ++ lastGood(feedB)
+    val mismatched = mismatches(expected)
+    val finalFlags = onlineFlags()
+    val aOnline = finalFlags.count { case (d, f) => d.startsWith("a-") && f == 1.0 }
+    val bOffline = finalFlags.count { case (d, f) => d.startsWith("b-") && f == 0.0 }
+    val silenceEvents = silencesPerInc.values.sum
+    val killedExits = childExits.init.map(_._2)
+
     val offered = offeredA + offeredB
-    val del = delivered.get()
+    val delivered = deliveredPerInc.values.sum
     def esc(s: String) = s.replaceAll("[\\x00-\\x1f\"\\\\]", " ")
-    val timelineJson = {
-      import scala.jdk.CollectionConverters._
-      timeline.asScala.map(e => f"""{"t":${e.wallS}%.1f,"event":"${esc(e.event)}"}""").mkString("[", ",", "]")
-    }
-    // "zero loss" at the USER-VISIBLE level: the final table is exactly
-    // what the feeds' last good values dictate, and every liveness flag
-    // ended where the script's physics demand (A live → online, B
-    // unsubscribed+silent → offline). `delivered` can legitimately trail
-    // `offered`: relaunch replays go through the T6 bounded queue, which
-    // DiscardOldest-truncates backfill to the newest N ticks per item —
-    // the reference's QueueSize semantic, applied to reconnects. The
-    // mutation/watchdog expectations only bind on runs long enough for
-    // the event-time windows to elapse (≥420 s).
-    val pass = mismatches.isEmpty && aOnline == nDevices &&
-      (durationS < 420 || (bOffline == nDevices && silenceEvents.size() >= 1 &&
-        mutations.values.forall(_ == 200)))
+    val timelineJson = timeline.asScala
+      .map(e => f"""{"t":${e.wallS}%.1f,"event":"${esc(e.event)}"}""").mkString("[", ",", "]")
+    val exitsJson = childExits
+      .map { case (i, c) => s"""{"incarnation":$i,"exit":$c}""" }.mkString("[", ",", "]")
+    // the mutation and watchdog expectations only bind on runs long enough
+    // for the event-time windows to elapse (≥ 420 s)
+    val pass = mismatched.isEmpty && aOnline == nDevices &&
+      killedExits.forall(_ == 137) && childExits.last._2 == 0 &&
+      (durationS < 420 || (bOffline == nDevices && silenceEvents >= 1 &&
+        Seq("add", "update", "delete").forall(mutations.get(_).contains(200))))
+    val tree = Harness.gitTree()
     val json =
-      f"""{"metric":"soak","db":"pg","duration_sec":$durationS,"offered":$offered,"offered_a":$offeredA,"offered_b":$offeredB,"delivered":$del,"delivered_vs_offered":${del.toDouble / offered}%.2f,"relaunches":${relaunches.get()},"config_mutations":{"add":${mutations.getOrElse("add", -1)},"update":${mutations.getOrElse("update", -1)},"delete":${mutations.getOrElse("delete", -1)}},"liveness_offline_transitions":${offlineTransitions.get()},"liveness_online_transitions":${onlineTransitions.get()},"watchdog_silence_events":${silenceEvents.size()},"final_a_online":$aOnline,"final_b_offline":$bOffline,"final_state_keys":${expected.size},"final_state_mismatches":${mismatches.size},"zero_loss_final_state":${mismatches.isEmpty},"pass":$pass,"timeline":$timelineJson}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      s"""{"metric":"soak","commit":"${tree.stripSuffix("+dirty")}","dirty":${tree.endsWith("+dirty")},""" +
+      s""""nproc":${Runtime.getRuntime.availableProcessors()},"cpus":$cpus,"pipeline":"$Pipeline","profile":"$Profile",""" +
+      s""""state_store":"rocksdb","db":"pg","duration_sec":$durationS,"kill_seed":$killSeed,""" +
+      s""""kill_at_s":${killAts.map(k => f"$k%.1f").mkString("[", ",", "]")},"child_exits":$exitsJson,""" +
+      s""""launches":${launches.get()},"offered":$offered,"offered_a":$offeredA,"offered_b":$offeredB,""" +
+      f""""delivered":$delivered,"delivered_vs_offered":${delivered.toDouble / offered}%.2f,""" +
+      s""""config_mutations":{"add":${mutations.getOrElse("add", -1)},"update":${mutations.getOrElse("update", -1)},"delete":${mutations.getOrElse("delete", -1)}},""" +
+      s""""liveness_offline_transitions":${offlineTransitions.get()},"liveness_online_transitions":${onlineTransitions.get()},""" +
+      s""""watchdog_silence_events":$silenceEvents,"final_a_online":$aOnline,"final_b_offline":$bOffline,""" +
+      s""""final_state_keys":${expected.size},"final_state_mismatches":${mismatched.size},""" +
+      s""""zero_loss_final_state":${mismatched.isEmpty},"pass":$pass,"timeline":$timelineJson}"""
+    Files.write(java.nio.file.Paths.get(outPath), (json + "\n").getBytes(UTF_8))
     println(json)
-    if (mismatches.nonEmpty) {
-      println(s"[soak] ${mismatches.size} final-state mismatches, first 10:")
-      mismatches.take(10).foreach(m => println(s"[soak]   $m"))
+    if (mismatched.nonEmpty) {
+      println(s"[soak] ${mismatched.size} final-state mismatches, first 10:")
+      mismatched.take(10).foreach(m => println(s"[soak]   $m"))
     }
-    spark.stop()
+    // a failed run keeps its config and checkpoints for the post-mortem
+    def rmTree(f: File): Unit = { Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete() }
+    if (pass) Seq(configDir, markerDir, ckptRoot).foreach(rmTree)
     if (pass) 0 else 1
-    }
+    } finally spark.stop()
     if (rc != 0) sys.exit(rc)
+  }
+}
+
+/** The deployed pipeline of [[Soak]], in a JVM the supervisor kill -9s.
+  * [[ConfigReload]] watches the supervisor's config directory; each launch
+  * reads the connections, opens one socket source per connection and
+  * starts the ingest pipeline plus production's server watchdog, all
+  * checkpointed under `<ckptRoot>/<configDigest>`. A fresh checkpoint (a
+  * changed config) first applies the K3 offline reset, as the reference's
+  * resubscribe does; a resumed one (a restart after a kill) keeps the flags
+  * its liveness state produced. The heartbeat runs once per JVM. The state
+  * store is RocksDB, the production provider, whose checkpointed files are
+  * exactly what must survive the kill.
+  *
+  * Progress goes to stdout for the supervisor: `[child] delivered=N
+  * silence_events=M` (cumulative in this JVM), `[child] launch ...` and
+  * `[child] QUERY DIED: ...`.
+  */
+object SoakChild {
+  def main(args: Array[String]): Unit = {
+    val Array(pgPort, configDir, ckptRoot, nDevicesArg, nMeasuresArg, incarnation) = args.take(6)
+    val (nDevices, nMeasures) = (nDevicesArg.toInt, nMeasuresArg.toInt)
+    // (device prefix, url) of every feed server: the watchdog's device dim
+    val dim = args.drop(6).grouped(2).toSeq
+      .flatMap { case Array(prefix, url) => (0 until nDevices).map(i => (s"$prefix$i", url)) }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = Harness.session(s"local[$cpus]", cpus, logLevel = "ERROR", extra = Map(
+      "spark.app.name" -> s"graft-soak-child-$incarnation",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    val target = new JdbcUpsert.Target(
+      Harness.PgConnect(pgPort.toInt, Soak.Db), dialect = JdbcUpsert.Postgres)
+
+    val delivered = new AtomicLong(0L)
+    val silences = new AtomicLong(0L)
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      // a query that dies mid-soak must say so: otherwise only the
+      // final-state check exposes it, minutes later
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        e.exception.foreach(m => println(s"[child] QUERY DIED: ${e.runId} -> ${m.take(300)}"))
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val counted = p.name match {
+          // value-path admission: the split value query or the fused one
+          case "graft-values" | "graft-fused" => delivered.addAndGet(p.numInputRows); true
+          // the watchdog's state operator removes a server's state only
+          // when it emits that server's silence event
+          case "graft-watchdog" => silences.addAndGet(p.stateOperators.map(_.numRowsRemoved).sum); true
+          case _ => false
+        }
+        if (counted) println(s"[child] delivered=${delivered.get()} silence_events=${silences.get()}")
+      }
+    })
+
+    // the soak's 1 s trigger in either profile: kills must land mid-batch
+    val profile = IngestProfile.byName(Soak.Profile).copy(trigger = Trigger.ProcessingTime("1 second"))
+    val plane = new ControlPlane(spark, new File(configDir), Soak.AesKey,
+      new BrowseJobRegistry(new File(ckptRoot, "browse-markers")))
+    val handleRef = new AtomicReference[IngestPipeline.Handle]()
+    val watchdogRef = new AtomicReference[StreamingQuery]()
+    def launch(): StreamingQuery = {
+      Option(handleRef.get()).foreach(_.stop())
+      Option(watchdogRef.get()).foreach(_.stop())
+      val conns = plane.list()
+      val ckpt = new File(ckptRoot, Soak.configDigest(conns))
+      val fresh = !ckpt.exists()
+      // K3: the reference's resubscribe bulk-resets every myPV_online flag
+      // and lets live values re-online the devices still configured
+      // (`Services/OpcSubscribeService.cs:257-259`); without it a deleted
+      // server's devices would stay online forever
+      if (fresh) target.offlineReset(java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+        .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now()))
+      println(s"[child] launch ${ckpt.getName} (${if (fresh) "fresh" else "resumed"}): " +
+        conns.map(_.url).mkString(", "))
+      // the named queries without an explicit location (the watchdog)
+      // checkpoint under <ckpt>/<query name>
+      spark.conf.set("spark.sql.streaming.checkpointLocation", ckpt.getPath)
+      val sources = conns.map { conn =>
+        val uri = java.net.URI.create(conn.url)
+        conn.url -> spark.readStream.format(classOf[MeasureSourceProvider].getName)
+          .option("nDevices", nDevices).option("nMeasures", nMeasures)
+          .option("numPartitions", 2)
+          .option("feedHost", uri.getHost).option("feedPort", uri.getPort)
+          .option("chunkRows", 65536L)
+          // live cadence is 16 ticks/s against 1 s triggers: the default
+          // 10-tick T6 queue would DiscardOldest on every live trigger.
+          // 1000 ticks keeps the live path lossless while still capping
+          // replay bursts (the reconnect-backfill semantic).
+          .option("queueCapacity", 1000L)
+          .load()
+      }
+      val raw = sources.map(_._2).reduce(_ union _)
+      val handle =
+        if (Soak.Pipeline == "fused") FusedPipeline.start(raw, target, 1.0, 0.0, profile, Some(ckpt.getPath))
+        else IngestPipeline.start(raw, target, 1.0, 0.0, profile, Some(ckpt.getPath))
+      handleRef.set(handle)
+      val withServer = sources.map { case (url, df) => df.withColumn("server", lit(url)) }.reduce(_ union _)
+      watchdogRef.set(IngestPipeline.watchdogQuery(withServer, dim, target, profile.trigger))
+      handle.valueQuery
+    }
+
+    // started before the first launch sets a checkpoint root: the
+    // heartbeat is stateless and runs once for the JVM's lifetime
+    val heartbeat = IngestPipeline.heartbeatQuery(spark, target, profile.heartbeatTrigger)
+    val reload = ConfigReload.watch(new File(configDir))(() => launch())
+    println(s"[child] incarnation $incarnation (${Soak.Pipeline}/${Soak.Profile}) started")
+
+    val stopFile = new File(ckptRoot, "STOP") // the supervisor's drain request
+    while (!stopFile.exists()) Thread.sleep(500)
+    println("[child] stop requested; draining")
+    val drain = new Thread(() => {
+      try Option(handleRef.get()).foreach(_.processAllAvailable()) catch { case _: Exception => () }
+    }, "child-drain")
+    drain.setDaemon(true); drain.start(); drain.join(120000)
+    println(s"[child] drain ${if (drain.isAlive) "TIMED OUT" else "complete"}; stopping")
+    reload.close()
+    Option(handleRef.get()).foreach(_.stop())
+    Option(watchdogRef.get()).foreach(_.stop())
+    heartbeat.stop()
+    spark.stop()
+    sys.exit(0)
   }
 }
