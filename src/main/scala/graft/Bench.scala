@@ -189,27 +189,28 @@ object Bench {
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val doWarm = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") == "1"
     def buildLine(calibAfter: Option[Double]): String = {
-      val qs = times.map { case (k, v) => s"\"" + k + "\":" + v }
+      import Harness.q
+      val qs = times.map { case (k, v) => s"${q(k)}:$v" }
         .mkString("{", ",", "}")
       // "queries" stays a flat name→median map (the driver contract);
       // "spread" carries [min, median, max] per query alongside it.
       val spJson = spreads
-        .map { case (k, (lo, med, hi)) => s"\"" + k + s"\":[$lo,$med,$hi]" }
+        .map { case (k, (lo, med, hi)) => s"${q(k)}:[$lo,$med,$hi]" }
         .mkString("{", ",", "}")
-      val errJson = errors.map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
+      val errJson = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }
         .mkString("{", ",", "}")
-      val contJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val loadJson = loadFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val skipJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val contJson = contended.map(q).mkString("[", ",", "]")
+      val loadJson = loadFlagged.map(q).mkString("[", ",", "]")
+      val skipJson = skipped.map(q).mkString("[", ",", "]")
       val foreignJson = foreigns
-        .map { case (k, v) => "\"" + k + f"""":${v}%.2f""" }
+        .map { case (k, v) => q(k) + f":$v%.2f" }
         .mkString("{", ",", "}")
       val total = times.map(_._2).sum
       val calibJson = calibAfter match {
         case Some(c) => f"[$calibBefore%.3f,$c%.3f]"
         case None    => f"[$calibBefore%.3f]" // mid-run snapshot: end anchor pending
       }
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spJson,"contended":$contJson,"load_flagged":$loadJson,"foreign_cores":$foreignJson,"errors":$errJson,"skipped":$skipJson,"calib_sec":$calibJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spJson,"contended":$contJson,"load_flagged":$loadJson,"foreign_cores":$foreignJson,"errors":$errJson,"skipped":$skipJson,"calib_sec":$calibJson,"sf":${q(sfDir)}}"""
     }
     // the file is the complete record: the driver's stdout capture
     // truncates long lines (q01–q16 were lost from BENCH_r03/r04)
@@ -264,9 +265,7 @@ object Bench {
         // below keeps the artifact current either way, and fatal
         // errors still abort the run AFTER their query is recorded.
         case e: Throwable =>
-          // strip ALL JSON-illegal chars (quotes, backslash, and every
-          // control char incl. \t \r) or the emitted line won't parse
-          errors += name -> e.toString.take(300).replaceAll("[\\x00-\\x1f\"\\\\]", " ")
+          errors += name -> e.toString.take(300)
           // the artifact carries only the message; the sf100 audit needed
           // the frames (the r13 "state-dependent IndexOutOfBounds" that
           // turned out to be this harness's own single-pass median bug)

@@ -231,15 +231,16 @@ object ClusterParity {
     val failures = perQuery.collect { case (n, _, _, false, _) => n } ++
       (if (pipeEq) Nil else Seq("pipeline_flow"))
 
+    import Harness.q
     val qJson = perQuery.map { case (n, l, c, eq, exactEq) =>
-      s""""$n":{"rows":${l.rows},"rows_cluster":${c.rows},"hash":"${l.roundedHash}",""" +
-        s""""hash_cluster":"${c.roundedHash}","equal":$eq,"exact_equal":$exactEq}"""
+      s"""${q(n)}:{"rows":${l.rows},"rows_cluster":${c.rows},"hash":${q(l.roundedHash)},""" +
+        s""""hash_cluster":${q(c.roundedHash)},"equal":$eq,"exact_equal":$exactEq}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"cluster_parity","commit":"${Harness.gitTree()}","queries":$qJson,""" +
+      s"""{"metric":"cluster_parity","commit":${q(Harness.gitTree())},"queries":$qJson,""" +
         s""""pipeline_rows":${localPipe.size},"pipeline_rows_cluster":${clusterPipe.size},""" +
-        s""""pipeline_equal":$pipeEq,"failures":${failures.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""local_sec":$localSec,"cluster_sec":$clusterSec,"sf":"$sfDir"}"""
+        s""""pipeline_equal":$pipeEq,"failures":${failures.map(q).mkString("[", ",", "]")},""" +
+        s""""local_sec":$localSec,"cluster_sec":$clusterSec,"sf":${q(sfDir)}}"""
     println(json)
     val outPath = sys.env.getOrElse("GRAFT_PARITY_OUT", "PARITY_r13.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

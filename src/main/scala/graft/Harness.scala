@@ -85,15 +85,39 @@ object Harness {
     } finally c.close()
   }
 
-  /** The commit an artifact certifies, so staleness is self-evident from
-    * the file alone: the short HEAD hash, `+dirty` when the tree has
-    * uncommitted changes, "unknown" without git rather than failing the
-    * run.
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character escaped (a raw tab or CR makes `json.load` reject the file).
     */
-  def gitTree(): String = {
+  def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The nearest directory at or above `start` that holds `.git`. */
+  private[graft] def checkoutOf(start: java.io.File): Option[java.io.File] =
+    Iterator.iterate(start.getAbsoluteFile)(_.getParentFile).takeWhile(_ != null)
+      .find(d => new java.io.File(d, ".git").exists())
+
+  /** The checkout these classes were loaded from, else the working directory. */
+  private def ownCheckout: java.io.File =
+    scala.util.Try(new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
+      .toOption.flatMap(checkoutOf).getOrElse(new java.io.File("."))
+
+  /** The commit an artifact certifies, so staleness is self-evident from
+    * the file alone: the short HEAD hash of checkout `dir`, `+dirty` when
+    * the tree has uncommitted changes, "unknown" without git rather than
+    * failing the run. By default a main records its own checkout's commit
+    * wherever it was started.
+    */
+  def gitTree(dir: java.io.File = ownCheckout): String = {
     def run(cmd: String*): Option[String] =
       try {
-        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+        val p = new ProcessBuilder(cmd: _*).directory(dir).redirectErrorStream(true).start()
         val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
         if (p.waitFor() == 0) Some(out) else None
       } catch { case _: Exception => None }

@@ -240,21 +240,22 @@ object Resilience {
         (if (!streamEqual) Seq("streaming: final table mismatch") else Nil) ++
         (if (streamKill.pid <= 0) Seq("streaming: killer never fired") else Nil)
 
+    import Harness.q
     val bJson = batchResults.map { b =>
-      s""""${b.name}":{"rows":${b.undisturbed.rows},"rows_disturbed":${b.disturbed.rows},""" +
-        s""""hash":"${b.undisturbed.roundedHash}","hash_disturbed":"${b.disturbed.roundedHash}",""" +
+      s"""${q(b.name)}:{"rows":${b.undisturbed.rows},"rows_disturbed":${b.disturbed.rows},""" +
+        s""""hash":${q(b.undisturbed.roundedHash)},"hash_disturbed":${q(b.disturbed.roundedHash)},""" +
         s""""equal":${b.equal},"exact_equal":${b.exactEqual},""" +
         f""""wall_undisturbed":${b.wallUndisturbed}%.2f,"wall_disturbed":${b.wallDisturbed}%.2f,""" +
         f""""kill_delay_sec":${b.kill.delaySec}%.2f,"killed_pid":${b.kill.pid},""" +
         s""""killed_in_flight":${b.kill.inFlight},"attempts":${b.attempts}}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"resilience","commit":"${Harness.gitTree()}",""" +
+      s"""{"metric":"resilience","commit":${q(Harness.gitTree())},""" +
         s""""master":"local-cluster[2,16,4096]","batch":$bJson,""" +
         s""""streaming":{"rows":${calmRows.size},"rows_disturbed":${killedRows.size},""" +
         s""""equal":$streamEqual,"killed_pid":${streamKill.pid},""" +
         f""""kill_delay_sec":${streamKill.delaySec}%.2f},""" +
-        s""""failures":${failures.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"}"""
+        s""""failures":${failures.map(q).mkString("[", ",", "]")},"sf":${q(sfDir)}}"""
     println(json)
     val outPath = sys.env.getOrElse("GRAFT_RESILIENCE_OUT", "RESILIENCE_r13.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

@@ -372,9 +372,9 @@ object Soak {
 
     val offered = offeredA + offeredB
     val delivered = deliveredPerInc.values.sum
-    def esc(s: String) = s.replaceAll("[\\x00-\\x1f\"\\\\]", " ")
+    import Harness.q
     val timelineJson = timeline.asScala
-      .map(e => f"""{"t":${e.wallS}%.1f,"event":"${esc(e.event)}"}""").mkString("[", ",", "]")
+      .map(e => f"""{"t":${e.wallS}%.1f,"event":${q(e.event)}}""").mkString("[", ",", "]")
     val exitsJson = childExits
       .map { case (i, c) => s"""{"incarnation":$i,"exit":$c}""" }.mkString("[", ",", "]")
     // the mutation and watchdog expectations only bind on runs long enough
@@ -385,8 +385,8 @@ object Soak {
         Seq("add", "update", "delete").forall(mutations.get(_).contains(200))))
     val tree = Harness.gitTree()
     val json =
-      s"""{"metric":"soak","commit":"${tree.stripSuffix("+dirty")}","dirty":${tree.endsWith("+dirty")},""" +
-      s""""nproc":${Runtime.getRuntime.availableProcessors()},"cpus":$cpus,"pipeline":"$Pipeline","profile":"$Profile",""" +
+      s"""{"metric":"soak","commit":${q(tree.stripSuffix("+dirty"))},"dirty":${tree.endsWith("+dirty")},""" +
+      s""""nproc":${Runtime.getRuntime.availableProcessors()},"cpus":$cpus,"pipeline":${q(Pipeline)},"profile":${q(Profile)},""" +
       s""""state_store":"rocksdb","db":"pg","duration_sec":$durationS,"kill_seed":$killSeed,""" +
       s""""kill_at_s":${killAts.map(k => f"$k%.1f").mkString("[", ",", "]")},"child_exits":$exitsJson,""" +
       s""""launches":${launches.get()},"offered":$offered,"offered_a":$offeredA,"offered_b":$offeredB,""" +
@@ -430,14 +430,16 @@ object SoakChild {
   def main(args: Array[String]): Unit = {
     val Array(pgPort, configDir, ckptRoot, nDevicesArg, nMeasuresArg, incarnation) = args.take(6)
     val (nDevices, nMeasures) = (nDevicesArg.toInt, nMeasuresArg.toInt)
-    // (device prefix, url) of every feed server: the watchdog's device dim
-    val dim = args.drop(6).grouped(2).toSeq
-      .flatMap { case Array(prefix, url) => (0 until nDevices).map(i => (s"$prefix$i", url)) }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = Harness.session(s"local[$cpus]", cpus, logLevel = "ERROR", extra = Map(
       "spark.app.name" -> s"graft-soak-child-$incarnation",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    import spark.implicits._
+    // (device prefix, url) of every feed server: the watchdog's device dim
+    val dim = args.drop(6).grouped(2).toSeq
+      .flatMap { case Array(prefix, url) => (0 until nDevices).map(i => (s"$prefix$i", url)) }
+      .toDF("device", "server")
     val target = new JdbcUpsert.Target(
       Harness.PgConnect(pgPort.toInt, Soak.Db), dialect = JdbcUpsert.Postgres)
 
@@ -484,9 +486,6 @@ object SoakChild {
         .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now()))
       println(s"[child] launch ${ckpt.getName} (${if (fresh) "fresh" else "resumed"}): " +
         conns.map(_.url).mkString(", "))
-      // the named queries without an explicit location (the watchdog)
-      // checkpoint under <ckpt>/<query name>
-      spark.conf.set("spark.sql.streaming.checkpointLocation", ckpt.getPath)
       val sources = conns.map { conn =>
         val uri = java.net.URI.create(conn.url)
         conn.url -> spark.readStream.format(classOf[MeasureSourceProvider].getName)
@@ -507,12 +506,12 @@ object SoakChild {
         else IngestPipeline.start(raw, target, 1.0, 0.0, profile, Some(ckpt.getPath))
       handleRef.set(handle)
       val withServer = sources.map { case (url, df) => df.withColumn("server", lit(url)) }.reduce(_ union _)
-      watchdogRef.set(IngestPipeline.watchdogQuery(withServer, dim, target, profile.trigger))
+      watchdogRef.set(IngestPipeline.watchdogQuery(
+        withServer, dim, target, profile.trigger, Some(ckpt.getPath)))
       handle.valueQuery
     }
 
-    // started before the first launch sets a checkpoint root: the
-    // heartbeat is stateless and runs once for the JVM's lifetime
+    // the heartbeat is stateless and runs once for the JVM's lifetime
     val heartbeat = IngestPipeline.heartbeatQuery(spark, target, profile.heartbeatTrigger)
     val reload = ConfigReload.watch(new File(configDir))(() => launch())
     println(s"[child] incarnation $incarnation (${Soak.Pipeline}/${Soak.Profile}) started")

@@ -55,14 +55,17 @@ final class FileConfigStore(spark: SparkSession, configDir: File) extends Config
 
   /** Atomic replace (temp + move): the ConfigReload watcher and any
     * concurrent reader see either the old or the new config, never a
-    * torn write.
+    * torn write. A file whose bytes would not change is left alone, so
+    * its mtime does not wake the watcher.
     */
   private def writeFile(f: File, lines: Seq[String]): Unit = {
-    val tmp = File.createTempFile(f.getName, ".tmp", configDir)
-    Files.write(tmp.toPath,
-      lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp.toPath, f.toPath, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    val bytes = lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
+    if (!(f.exists() && java.util.Arrays.equals(Files.readAllBytes(f.toPath), bytes))) {
+      val tmp = File.createTempFile(f.getName, ".tmp", configDir)
+      Files.write(tmp.toPath, bytes)
+      Files.move(tmp.toPath, f.toPath, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    }
   }
 
   override def load(): (Seq[ConnectionEntity], Seq[BrowseExclusionFolder]) = {
@@ -86,12 +89,14 @@ final class FileConfigStore(spark: SparkSession, configDir: File) extends Config
   override def replaceAll(ents: Seq[ConnectionEntity],
                           flds: Seq[BrowseExclusionFolder]): Unit = {
     import spark.implicits._
-    writeFile(entitiesFile,
-      spark.createDataset(ents).toDF()
-        .withColumn("encryptedPassword", base64(col("encryptedPassword")))
-        .orderBy("id").toJSON.collect().toSeq)
-    writeFile(foldersFile,
-      spark.createDataset(flds).toDF().orderBy("id").toJSON.collect().toSeq)
+    // serialize both before writing either: the Spark jobs take most of
+    // a second, and a watcher polling between two writes relaunches twice
+    val entLines = spark.createDataset(ents).toDF()
+      .withColumn("encryptedPassword", base64(col("encryptedPassword")))
+      .orderBy("id").toJSON.collect().toSeq
+    val fldLines = spark.createDataset(flds).toDF().orderBy("id").toJSON.collect().toSeq
+    writeFile(entitiesFile, entLines)
+    writeFile(foldersFile, fldLines)
   }
 }
 

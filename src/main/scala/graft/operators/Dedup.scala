@@ -265,87 +265,6 @@ object Dedup {
           .reduce(_ + _).as("simhash"))
   }
 
-  /** Per-round snapshot/reclaim for the iterative CC loops. With a
-    * RELIABLE checkpoint dir (`sparkContext.setCheckpointDir`) rounds
-    * snapshot as parquet — executor loss mid-loop recovers from storage —
-    * and each superseded round's snapshot is DELETED as soon as its
-    * successor materializes (Spark's own `checkpoint()` never reclaims,
-    * so a long loop would leak corpus-scale snapshots per round). Without
-    * one it falls back to `localCheckpoint` (fast, executor-local, fine
-    * on local[n]; set a checkpoint dir for long cluster runs or dynamic
-    * allocation). Either way the checkpoint truncates the per-round
-    * lineage so plan depth stays constant across rounds.
-    */
-  private[graft] final class RoundSnapshots(spark: org.apache.spark.sql.SparkSession) {
-    // Parquet round-trip ALWAYS (round 14): the former no-checkpoint-dir
-    // branch used localCheckpoint(), whose blocks live in executor
-    // storage memory and — the defect — were NEVER reclaimed (reclaim
-    // was a no-op for that branch), so an 8-round kCore at sf100
-    // retained eight 150M-row edge snapshots on one 32 GB heap and died
-    // of Java-heap OOM mid-board. A snapshot's job is lineage
-    // truncation + durability of the ROUND, not cache residency:
-    // parquet on local disk gives both, reclaim is a directory delete
-    // that works identically with or without a cluster checkpoint dir,
-    // and the OS page cache keeps hot re-reads near memory speed.
-    private val base = spark.sparkContext.getCheckpointDir.getOrElse {
-      // The tmpdir fallback is only sound when driver and executors see
-      // ONE filesystem: on a multi-node cluster whose default FS is
-      // local (no HDFS/object store), executors would commit task files
-      // to their own disks and the driver-side re-read would silently
-      // lose rows (r14 ADVICE). local[n]/local-cluster[...] masters run
-      // every executor on this box, and a non-local default FS means
-      // the path below resolves to shared storage either way.
-      val master = spark.sparkContext.master
-      val defaultFs = org.apache.hadoop.fs.FileSystem
-        .getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme
-      require(master.startsWith("local") || (defaultFs != null && defaultFs != "file"),
-        s"RoundSnapshots needs spark.sparkContext.setCheckpointDir(...) on master " +
-          s"'$master' with local default filesystem '$defaultFs': a java.io.tmpdir " +
-          "snapshot would scatter task files across executor disks and silently " +
-          "drop rows on re-read")
-      System.getProperty("java.io.tmpdir")
-    } + "/graft-cc-" + java.util.UUID.randomUUID()
-    RoundSnapshots.registerForCleanup(spark, base)
-    private var step = 0
-    def snapshot(df: DataFrame): DataFrame = {
-      val path = s"$base/step-$step"
-      step += 1
-      df.write.parquet(path)
-      spark.read.parquet(path)
-    }
-    def reclaim(df: DataFrame): Unit =
-      df.inputFiles.headOption.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f).getParent
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-  }
-
-  private[graft] object RoundSnapshots {
-    // Every operator invocation leaves its FINAL snapshot on disk (it
-    // backs the result's lineage, so it cannot be reclaimed eagerly) —
-    // before round 15 those accumulated in tmp across sessions (r14
-    // ADVICE). One JVM-wide shutdown hook deletes every base dir this
-    // process created; paths are recorded eagerly, deletion is
-    // best-effort (the JVM is exiting).
-    private val bases = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    private val hookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    private[graft] def registerForCleanup(
-        spark: org.apache.spark.sql.SparkSession, base: String): Unit = {
-      val conf = new org.apache.hadoop.conf.Configuration(
-        spark.sparkContext.hadoopConfiguration)
-      bases.add(base)
-      if (hookArmed.compareAndSet(false, true))
-        sys.addShutdownHook {
-          bases.forEach { b =>
-            try {
-              val p = new org.apache.hadoop.fs.Path(b)
-              p.getFileSystem(conf).delete(p, true)
-            } catch { case _: Exception => () }
-          }
-        }
-    }
-  }
-
   /** Connected components over an undirected pair list — the step that
     * turns near-dup PAIRS into dedup CLUSTERS (transitive closure: if
     * A≈B and B≈C, all three are one duplicate group with one canonical
@@ -365,38 +284,32 @@ object Dedup {
     // Hybrid decision: count the symmetrized edge set from a CACHE, not a
     // snapshot — the fast path must not pay (or leak) a parquet round
     // trip it will never use.
-    val cached = pairs
-      .select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .distinct()
-      .persist()
-    val edgeCount = cached.count()
-    if (edgeCount <= smallGraphEdges) {
-      val adj = scala.collection.mutable.Map.empty[Long, List[Long]]
-      cached.select("src", "dst").collect().foreach { r =>
-        val (s, d) = (r.getLong(0), r.getLong(1))
-        adj(s) = d :: adj.getOrElse(s, Nil)
-      }
-      cached.unpersist()
-      val label = scala.collection.mutable.Map.empty[Long, Long]
-      adj.keys.toSeq.sorted.foreach { root =>
-        if (!label.contains(root)) { // BFS this component; root is its min
-          var frontier = List(root)
-          label(root) = root
-          while (frontier.nonEmpty) {
-            frontier = frontier.flatMap(adj(_))
-              .filter(v => !label.contains(v))
-              .distinct
-            frontier.foreach(label(_) = root)
+    val cached = symmetric(pairs).persist()
+    try {
+      if (cached.count() > smallGraphEdges) starsWithRounds(cached, maxIter)._1
+      else {
+        val adj = scala.collection.mutable.Map.empty[Long, List[Long]]
+        cached.select("src", "dst").collect().foreach { r =>
+          val (s, d) = (r.getLong(0), r.getLong(1))
+          adj(s) = d :: adj.getOrElse(s, Nil)
+        }
+        val label = scala.collection.mutable.Map.empty[Long, Long]
+        adj.keys.toSeq.sorted.foreach { root =>
+          if (!label.contains(root)) { // BFS this component; root is its min
+            var frontier = List(root)
+            label(root) = root
+            while (frontier.nonEmpty) {
+              frontier = frontier.flatMap(adj(_))
+                .filter(v => !label.contains(v))
+                .distinct
+              frontier.foreach(label(_) = root)
+            }
           }
         }
+        import spark.implicits._
+        label.toSeq.sortBy(_._1).toDF("v", "cluster_id")
       }
-      import spark.implicits._
-      return label.toSeq.sortBy(_._1).toDF("v", "cluster_id")
-    }
-    val result = starsWithRounds(cached, maxIter)._1
-    cached.unpersist()
-    result
+    } finally cached.unpersist()
   }
 
   /** Distributed CC by alternating LARGE-STAR / SMALL-STAR rounds
@@ -412,29 +325,45 @@ object Dedup {
     * with one join per round), and a star forest is a fixpoint of both
     * phases with every center the component minimum.
     */
-  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    val sym = pairs
-      .select(col("d1").as("src"), col("d2").as("dst"))
+  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 30): DataFrame =
+    starsWithRounds(symmetric(pairs), maxIter)._1
+
+  /** The distinct (src, dst) edges of an undirected (d1, d2) pair list, both directions. */
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
       .distinct()
-    starsWithRounds(sym, maxIter)._1
-  }
 
   /** [[connectedComponentsStars]] plus the round count it took — the spec
     * pins the O(log n) behavior with it. `sym` must be the symmetrized,
     * self-loop-free edge set.
     */
   private[graft] def starsWithRounds(sym: DataFrame, maxIter: Int): (DataFrame, Int) = {
-    val snaps = new RoundSnapshots(sym.sparkSession)
     // orient larger→smaller: the small-star invariant both phases preserve
-    var edges = snaps.snapshot(
-      sym.filter(col("src") =!= col("dst"))
-        .select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst"))
-        .distinct())
-    var rounds = 0
-    var converged = edges.isEmpty
-    while (!converged && rounds < maxIter) {
+    val oriented = sym.filter(col("src") =!= col("dst"))
+      .select(greatest(col("src"), col("dst")).as("src"),
+        least(col("src"), col("dst")).as("dst"))
+      .distinct()
+    // star forest ⇔ sources and targets are disjoint vertex sets AND
+    // every source has exactly one outgoing edge. Disjointness alone is
+    // NOT sufficient: {(1,4),(5,0),(4,2),(5,2)} reaches, after one
+    // round, {(2,1),(4,1),(2,0),(5,0)} — sources {2,4,5} and targets
+    // {0,1} disjoint, yet vertex 2 still points at TWO would-be
+    // centers; stopping there would split one component into two
+    // clusters and emit conflicting labels for 2. The out-degree-1
+    // condition rules exactly that state out: together they mean the
+    // edge set is a disjoint union of stars, which both phases then
+    // fix (centers are each star's — and by connectivity preservation
+    // each component's — minimum).
+    val starForest = Fixpoint.Until(maxIter,
+      Some(s"connectedComponentsStars did not converge in $maxIter rounds")) { (_, next) =>
+      val e = next.df
+      e.groupBy("src").agg(count(lit(1)).as("deg")).filter(col("deg") > 1).isEmpty &&
+        e.select(col("src").as("x")).distinct()
+          .join(e.select(col("dst").as("x")).distinct(), Seq("x"))
+          .isEmpty
+    }
+    val Fixpoint.Result(edges, rounds) = Fixpoint.iterate(oriented, starForest, snapshotEvery = 1) { edges =>
       // LARGE-STAR: per vertex u over its full neighborhood Γ(u)∪{u},
       // connect every neighbor v > u to m = min(Γ(u)∪{u})
       val symE = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -449,34 +378,12 @@ object Dedup {
       // SMALL-STAR: per vertex u over its SMALLER neighbors N(u)∪{u},
       // connect everything to m = min N(u) (all dsts < u, so m < u)
       val minsS = afterLarge.groupBy("src").agg(min(col("dst")).as("m"))
-      val next = snaps.snapshot(
-        afterLarge.join(minsS, Seq("src"))
-          .filter(col("dst") =!= col("m"))
-          .select(col("dst").as("src"), col("m").as("dst"))
-          .union(minsS.select(col("src"), col("m").as("dst")))
-          .distinct())
-      rounds += 1
-      // star forest ⇔ sources and targets are disjoint vertex sets AND
-      // every source has exactly one outgoing edge. Disjointness alone is
-      // NOT sufficient: {(1,4),(5,0),(4,2),(5,2)} reaches, after one
-      // round, {(2,1),(4,1),(2,0),(5,0)} — sources {2,4,5} and targets
-      // {0,1} disjoint, yet vertex 2 still points at TWO would-be
-      // centers; stopping there would split one component into two
-      // clusters and emit conflicting labels for 2. The out-degree-1
-      // condition rules exactly that state out: together they mean the
-      // edge set is a disjoint union of stars, which both phases then
-      // fix (centers are each star's — and by connectivity preservation
-      // each component's — minimum).
-      val multiOut = next.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") > 1).isEmpty
-      converged = multiOut && next.select(col("src").as("x")).distinct()
-        .join(next.select(col("dst").as("x")).distinct(), Seq("x"))
-        .isEmpty
-      snaps.reclaim(edges)
-      edges = next
+      afterLarge.join(minsS, Seq("src"))
+        .filter(col("dst") =!= col("m"))
+        .select(col("dst").as("src"), col("m").as("dst"))
+        .union(minsS.select(col("src"), col("m").as("dst")))
+        .distinct()
     }
-    require(converged,
-      s"connectedComponentsStars did not converge in $maxIter rounds")
     val labels = edges.select(col("src").as("v"), col("dst").as("cluster_id"))
       .union(edges.select(col("dst").as("v"), col("dst").as("cluster_id")))
       .distinct()
@@ -488,38 +395,31 @@ object Dedup {
     * [[connectedComponentsStars]] (DedupSpec property-tests label
     * equivalence): the stars alternation is the production path, this is
     * the independently-simple formulation results are checked against.
+    * The edge set is loop-invariant, so each round re-reads it from
+    * `pairs` and only the label frame is snapshotted.
     */
   def connectedComponentsMinLabel(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    val snaps = new RoundSnapshots(spark)
-    val edges = snaps.snapshot(pairs
-      .select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .distinct())
-    var labels = snaps.snapshot(edges.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v")))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
+    val edges = symmetric(pairs)
+    val labels0 = edges.select(col("src").as("v")).distinct()
+      .withColumn("label", col("v"))
+    // each round carries the previous label THROUGH the snapshot so the
+    // convergence test is a scan of the materialized round, not a second
+    // corpus-keyed join
+    val stable = Fixpoint.Until(maxIter, Some(s"connectedComponents did not converge in " +
+      s"$maxIter rounds — component diameter exceeds the cap")) { (_, next) =>
+      next.df.filter(col("label") < col("prev")).isEmpty
+    }
+    val labels = Fixpoint.iterate(labels0, stable, snapshotEvery = 1) { labels =>
       val nbrMin = edges
         .join(labels.select(col("v").as("src"), col("label")), Seq("src"))
         .groupBy("dst").agg(min("label").as("nbr_min"))
         .select(col("dst").as("v"), col("nbr_min"))
-      // carry the previous label THROUGH the checkpoint so the
-      // convergence count is a scan of the materialized blocks, not a
-      // second corpus-keyed join per round
-      val next = snaps.snapshot(labels.select(col("v"), col("label").as("prev"))
+      labels.select(col("v"), col("label").as("prev"))
         .join(nbrMin, Seq("v"), "left_outer")
         .select(col("v"),
           least(col("prev"), coalesce(col("nbr_min"), col("prev"))).as("label"),
-          col("prev")))
-      changed = next.filter(col("label") < col("prev")).count()
-      snaps.reclaim(labels) // superseded round — next is materialized
-      labels = next.select("v", "label")
-      i += 1
-    }
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIter rounds — component diameter exceeds the cap")
+          col("prev"))
+    }.df
     labels.select(col("v"), col("label").as("cluster_id"))
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics on edge DataFrames — the keyed-join
   * fixed-point pattern (companion to [[Dedup.connectedComponents]]'s
-  * star-contraction loop).
+  * star-contraction loop). Every round loop runs through [[Fixpoint]].
   */
 object GraphOps {
 
@@ -103,24 +103,20 @@ object GraphOps {
     * shuffling it — eliminating one of the two exchanges per round; a
     * billion-node graph exceeds the threshold and keeps the shuffled
     * join (both forms are integer-sum order-invariant, so the result is
-    * bit-identical either way). Every `checkpointEvery` rounds the
-    * node-sized rank frontier is snapshotted (parquet round-trip,
-    * under the session checkpoint dir when set) and the
-    * superseded snapshot reclaimed — plan depth and snapshot storage
-    * stay constant no matter how many rounds run, so `iters` = 30+ is
-    * safe.
+    * bit-identical either way). Every `snapshotEvery` rounds
+    * [[Fixpoint]] snapshots the node-sized rank frontier, so plan depth
+    * and snapshot storage stay constant and `iters` = 30+ is safe.
     *
     * At 1e9+ nodes, lower `scale` (total mass `nodes * scale` must stay
     * well under 2^63; 1e6 leaves 9e3 headroom at a billion nodes).
     */
   def pageRankInt(edges: DataFrame, iters: Int, scale: Long = 1000000000L,
-                  dampNum: Long = 85L, checkpointEvery: Int = 10,
+                  dampNum: Long = 85L, snapshotEvery: Int = 10,
                   broadcastFrontierMaxNodes: Long = 4000000L,
                   adjacencyTable: Option[(String, String)] = None,
                   disjointDomains: Boolean = false): DataFrame = {
-    require(iters >= 1 && dampNum >= 0 && dampNum <= 100 && checkpointEvery >= 1)
+    require(iters >= 1 && dampNum >= 0 && dampNum <= 100)
     val spark = edges.sparkSession
-    val snaps = new Dedup.RoundSnapshots(spark)
     // disjointDomains (round 14): the caller asserts the directed edge
     // list is ALREADY distinct and src/dst draw from disjoint id domains
     // (q138's even/odd encoding), so e ∩ swap(e) = ∅ and the symmetrized
@@ -166,9 +162,7 @@ object GraphOps {
     // adjacency behind it) and sizes the broadcast decision
     val nNodes = frontier0.count()
     val small = nNodes <= broadcastFrontierMaxNodes
-    var ranks = frontier0
-    var lastSnap: Option[DataFrame] = None
-    for (i <- 1 to iters) {
+    val ranks = Fixpoint.iterate(frontier0, Fixpoint.Rounds(iters), snapshotEvery) { ranks =>
       // past the broadcast threshold the node frontier joins SHUFFLE-HASH,
       // never sort-merge (round 14 — the sf100 adjudication): the
       // adjacency side is pre-partitioned on src, but SMJ would also
@@ -176,7 +170,7 @@ object GraphOps {
       // partition keeps the adjacency a pure stream; integer sums are
       // join-strategy-invariant, so results are unchanged. The contrib
       // divides ONCE per node, then fans out by explode.
-      val next = adj.join(
+      adj.join(
           if (small) broadcast(ranks) else ranks.hint("shuffle_hash"),
           col("src") === col("node"))
         .withColumn("contrib", expr("rank_fp div size(dsts)"))
@@ -184,17 +178,8 @@ object GraphOps {
         .groupBy(col("dst").as("node"))
         .agg((base + expr(s"($dampNum * sum(contrib)) div 100")).as("rank_fp"))
         .select(col("node"), col("rank_fp"))
-      if (i % checkpointEvery == 0 && i < iters) {
-        val snapped = snaps.snapshot(next)
-        lastSnap.foreach(snaps.reclaim)
-        lastSnap = Some(snapped)
-        ranks = snapped
-      } else ranks = next
-    }
-    val out = ranks.orderBy(col("rank_fp").desc, col("node"))
-    // NOTE: the final snapshot (if any) backs `out`'s lineage — reclaimed
-    // by the caller's session teardown, not here, so `out` stays runnable.
-    out
+    }.df
+    ranks.orderBy(col("rank_fp").desc, col("node"))
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.
@@ -220,7 +205,8 @@ object GraphOps {
     * round's join as a BROADCAST when the node count fits
     * `broadcastFrontierMaxNodes` (integer counts + deterministic argmax
     * are join-strategy-invariant, so the result is identical either
-    * way); a graph past the threshold keeps the shuffled join.
+    * way); a graph past the threshold keeps the shuffled join. The
+    * frontier is snapshotted on [[pageRankInt]]'s default cadence.
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
                        broadcastFrontierMaxNodes: Long = 4000000L): DataFrame =
@@ -271,25 +257,24 @@ object GraphOps {
   def labelPropagationSym(sym: DataFrame, rounds: Int,
                           broadcastFrontierMaxNodes: Long = 4000000L): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
-    var labels = sym.select(col("src").as("node")).distinct()
+    val labels0 = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .persist()
-    val small = labels.count() <= broadcastFrontierMaxNodes
-    for (_ <- 1 to rounds) {
+    val small = labels0.count() <= broadcastFrontierMaxNodes
+    Fixpoint.iterate(labels0, Fixpoint.Rounds(rounds)) { labels =>
       // shuffle-hash past the broadcast threshold — the pageRankInt
       // round-join posture (SMJ would re-sort the cached edge side
       // every round; the label frontier is the node-sized build side,
       // probing the CACHED fixed-partition sym, so per-task builds stay
       // small — the safe SHJ case, unlike modularity's coalesced joins)
-      labels = sym.join(
+      sym.join(
           if (small) broadcast(labels) else labels.hint("shuffle_hash"),
           col("src") === col("node"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst").as("node"))
         .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("m"))
         .select(col("node"), (-col("m.neg")).as("label"))
-    }
-    labels
+    }.df
   }
 
   /** Per-node triangle participation counts via DEGREE-ORIENTED wedge
@@ -420,12 +405,11 @@ object GraphOps {
     *
     * Per round: one degree aggregation + two node-keyed semi-joins over
     * the snapshotted edge set — no driver state beyond the convergence
-    * counter, no corpus-shaped collect. Each round SNAPSHOTS its edge
-    * frame (the [[Dedup.RoundSnapshots]] CC/PageRank convention):
-    * a peel round references its parent three times (degrees + both
-    * semi-join sides), so chained lineage grows EXPONENTIALLY — 3^r
-    * plan copies by round r — and even plan stringification stops
-    * terminating; the snapshot keeps every round's plan flat.
+    * counter, no corpus-shaped collect. A peel round references its
+    * parent three times (degrees + both semi-join sides), so lazily
+    * chained lineage grows 3^r; [[Fixpoint]] materializes every round and
+    * snapshots every `snapshotEvery`-th (round 16: per-round parquet
+    * round-trips were q193's #3 board cost).
     *
     * Output: (node, deg) for every node surviving the peel, with its
     * degree inside the surviving subgraph (all ≥ k at convergence).
@@ -433,61 +417,21 @@ object GraphOps {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 8,
             snapshotEvery: Int = 2): DataFrame = {
     require(k >= 1, "kCore needs k >= 1")
-    require(snapshotEvery >= 1, "kCore needs snapshotEvery >= 1")
-    val spark = edges.sparkSession
-    val snaps = new Dedup.RoundSnapshots(spark)
     val und = edges.toDF("x", "y").filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .distinct()
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).union(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-    var e = snaps.snapshot(und)
-    var lastSnap = e
-    var nEdges = e.count()
-    var r = 0
-    var converged = nEdges == 0
-    // rounds since the last parquet snapshot, and the in-memory-cached
-    // intermediates accumulated since then (round 16): a peel round
-    // references its parent three times, so every round still
-    // MATERIALIZES (persist + count) to keep recompute linear — but only
-    // every `snapshotEvery`-th round pays the parquet write + re-read
-    // (q193's measured #3 board cost was exactly those round-trips).
-    // Plan depth between snapshots is bounded by snapshotEvery, so the
-    // 3^r lineage blow-up the per-round snapshot existed to stop stays
-    // stopped; a cached round evicted under pressure recomputes through
-    // ≤ snapshotEvery−1 rounds from the last snapshot's parquet.
-    var sinceSnap = 0
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (r < maxRounds && !converged) {
+    // peeling only removes edges, so an unchanged count is a round that
+    // removed nothing; maxRounds is the contract, not a failure
+    val stable = Fixpoint.Until(maxRounds, failure = None)((prev, next) => prev.count == next.count)
+    val e = Fixpoint.iterate(und, stable, snapshotEvery) { e =>
       val keep = degrees(e).filter(col("deg") >= k).select("node")
-      val peeled = e
-        .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
+      e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-      val snapRound = sinceSnap + 1 >= snapshotEvery
-      val next = if (snapRound) snaps.snapshot(peeled) else peeled.persist()
-      val nNext = next.count()
-      if (snapRound) {
-        // the new snapshot is lineage-free parquet: the old snapshot and
-        // every cached intermediate built on it are now unreferenced
-        snaps.reclaim(lastSnap)
-        cached.foreach(_.unpersist(blocking = false))
-        cached.clear()
-        lastSnap = next
-        sinceSnap = 0
-      } else {
-        cached += next
-        sinceSnap += 1
-      }
-      converged = nNext == nEdges
-      e = next
-      nEdges = nNext
-      r += 1
-    }
-    // the final snapshot (and any cached rounds past it) back the
-    // result's lineage — reclaimed by session teardown, not here (the
-    // pageRankInt convention)
+    }.df
     degrees(e).filter(col("deg") >= k)
   }
 }

@@ -156,24 +156,21 @@ object IngestPipeline {
   /** T3 fan-out (reference `:980-997`): a server silent for 3 minutes
     * marks EVERY device of that server offline. The stream carries
     * (server, source_ts); each silence event joins the (device, server)
-    * dimension batch-side and lands as myPV_online=0 upserts.
-    */
-  def watchdogQuery(withServer: DataFrame, deviceDim: Seq[(String, String)],
-                    target: UpsertTarget, trigger: Trigger): StreamingQuery = {
-    import withServer.sparkSession.implicits._
-    watchdogQuery(withServer, deviceDim.toDF("device", "server"), target, trigger)
-  }
-
-  /** The (device, server) dim as a DataFrame — the production form, fed
-    * directly by the config plane (`ConfigFiles.devicePoints(...)
-    * .select(col("daq_name").as("device"), col("server"))`) with no
-    * driver collect anywhere on the path.
+    * dimension batch-side and lands as myPV_online=0 upserts. The dim is
+    * a DataFrame — the production form, fed directly by the config plane
+    * (`ConfigFiles.devicePoints(...).select(col("daq_name").as("device"),
+    * col("server"))`) with no driver collect anywhere on the path.
+    *
+    * With `checkpointDir` (as for [[start]]) the query checkpoints to
+    * `<dir>/watchdog`, so a restart resumes every server's last-seen time
+    * and the watermark.
     */
   def watchdogQuery(withServer: DataFrame, deviceDim: DataFrame,
                     target: UpsertTarget,
-                    trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
+                    trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
+                    checkpointDir: Option[String] = None): StreamingQuery = {
     LocalCheckpointFs.install(withServer.sparkSession)
-    ServerWatchdog.silenceEvents(withServer)
+    val writer = ServerWatchdog.silenceEvents(withServer)
       .writeStream.outputMode("append").trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ServerWatchdog.SilenceEvent], _: Long) =>
         val spark = batch.sparkSession
@@ -191,6 +188,7 @@ object IngestPipeline {
         rows.foreachPartition(
           (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
       }
-      .queryName("graft-watchdog").start()
+      .queryName("graft-watchdog")
+    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", s"$d/watchdog")).start()
   }
 }

@@ -51,6 +51,26 @@ class ControlPlaneSpec extends SparkSpec {
     } finally handle.close()
   }
 
+  test("FileConfigStore.replaceAll leaves a file whose bytes do not change untouched") {
+    import graft.control.FileConfigStore
+    import graft.operators.DtoMapping.{BrowseExclusionFolder, ConnectionEntity}
+    val dir = Files.createTempDirectory("graft-config-store").toFile
+    val store = new FileConfigStore(spark, dir)
+    def conn(url: String) = ConnectionEntity(1, url, "user", Array[Byte](1, 2, 3), 5000, 100)
+    val folders = Seq(BrowseExclusionFolder(1L, 1, "Server"))
+    store.replaceAll(Seq(conn("opc.tcp://a:4840")), folders)
+    val (conns, flds) = (new File(dir, "connections.json"), new File(dir, "exclusion_folders.json"))
+    val past = 1000000000000L // 2001-09-09: any later write moves it
+    Seq(conns, flds).foreach(f => assert(f.setLastModified(past)))
+    store.replaceAll(Seq(conn("opc.tcp://b:4840")), folders)
+    // the changed connection list is rewritten; the folder list is not,
+    // so a ConfigReload watcher sees one change, not two
+    assert(conns.lastModified() != past)
+    assert(flds.lastModified() == past)
+    val (ents, fs) = store.load()
+    assert(ents.map(_.url) == Seq("opc.tcp://b:4840") && fs == folders)
+  }
+
   test("ConfigReload: failed relaunch retries on the next poll instead of dying (S3 retry parity)") {
     val dir = Files.createTempDirectory("graft-config-retry").toFile
     val cfg = new File(dir, "cfg.json")

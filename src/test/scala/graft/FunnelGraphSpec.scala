@@ -112,9 +112,9 @@ class FunnelGraphSpec extends SparkSpec {
     // Lineage snapshots every 4 rounds must not change a single rank bit,
     // and the 30-round run must complete without plan-depth blowup.
     val edges = (1L to 60L).map(i => (i, i % 11)).toDF("src", "dst")
-    val snapped = GraphOps.pageRankInt(edges, iters = 30, checkpointEvery = 4)
+    val snapped = GraphOps.pageRankInt(edges, iters = 30, snapshotEvery = 4)
       .as[(Long, Long)].collect().toList
-    val plain = GraphOps.pageRankInt(edges, iters = 30, checkpointEvery = 1000)
+    val plain = GraphOps.pageRankInt(edges, iters = 30, snapshotEvery = 1000)
       .as[(Long, Long)].collect().toList
     assert(snapped == plain)
     assert(snapped.nonEmpty)

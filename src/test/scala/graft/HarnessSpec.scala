@@ -4,8 +4,9 @@ import org.scalatest.BeforeAndAfterAll
 import graft.streaming.CurrentValuesSink.ModRow
 
 /** [[Harness.withModvalues]], the Postgres fixture of the harness mains,
-  * against a live ephemeral server. Like PgLiveSpec, every test cancels
-  * with the reason where no server can run.
+  * against a live ephemeral server (like PgLiveSpec, those tests cancel
+  * with the reason where no server can run), plus the JSON string encoder
+  * and the commit every artifact records.
   */
 class HarnessSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -71,5 +72,38 @@ class HarnessSpec extends SparkSpec with BeforeAndAfterAll {
     }
     assert(port > 0)
     intercept[java.net.ConnectException](new java.net.Socket("127.0.0.1", port).close())
+  }
+
+  test("q: every artifact string round-trips through a strict JSON reader") {
+    val s = "quote \" backslash \\ tab \t cr \r nl \n ctl \u0001 \u001f del \u007f é 日本 😀"
+    val encoded = Harness.q(s)
+    assert(!encoded.exists(_ < ' '), "raw control character in the literal")
+    assert(new com.fasterxml.jackson.databind.ObjectMapper().readValue(encoded, classOf[String]) == s)
+  }
+
+  test("gitTree reads the checkout it is given; checkoutOf walks up to the .git") {
+    val repo = java.nio.file.Files.createTempDirectory("graft-git").toFile
+    def git(args: String*): String = {
+      val p = new ProcessBuilder(Seq("git", "-c", "user.name=t", "-c", "user.email=t@t",
+        "-c", "commit.gpgsign=false") ++ args: _*).directory(repo).redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+      assume(p.waitFor() == 0, s"git ${args.mkString(" ")}: $out")
+      out
+    }
+    git("init", "-q")
+    java.nio.file.Files.write(new java.io.File(repo, "f").toPath, "x".getBytes)
+    git("add", "f"); git("commit", "-q", "-m", "c")
+    val head = git("rev-parse", "--short=12", "HEAD")
+    // the test JVM runs in another directory: the hash is repo's own
+    assert(Harness.gitTree(repo) == head)
+    // where sbt puts the classes, inside the checkout
+    val classes = new java.io.File(repo, "target/scala-2.13/classes")
+    assert(classes.mkdirs())
+    assert(Harness.checkoutOf(classes).contains(repo.getAbsoluteFile))
+    java.nio.file.Files.write(new java.io.File(classes, "Harness.class").toPath, Array[Byte](0))
+    assert(Harness.gitTree(repo) == s"$head+dirty") // target/ is untracked
+    val outside = java.nio.file.Files.createTempDirectory("graft-no-git").toFile
+    assert(Harness.checkoutOf(outside).isEmpty)
+    assert(Harness.gitTree(outside) == "unknown")
   }
 }

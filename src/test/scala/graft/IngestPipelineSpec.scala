@@ -157,7 +157,7 @@ class IngestPipelineSpec extends SparkSpec {
       ModRow("d2", CurrentValues.OnlineMeasure, 1.0, 1.0, "T0"),
       ModRow("d3", CurrentValues.OnlineMeasure, 1.0, 1.0, "T0")))
     val q = IngestPipeline.watchdogQuery(withServer,
-      Seq(("d1", "s1"), ("d2", "s1"), ("d3", "s2")), target,
+      Seq(("d1", "s1"), ("d2", "s1"), ("d3", "s2")).toDF("device", "server"), target,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
     try {
       input.addData(("s1", ts("2024-01-01 00:00:00")), ("s2", ts("2024-01-01 00:00:00")))
@@ -171,6 +171,37 @@ class IngestPipelineSpec extends SparkSpec {
       assert(online("d1") == 0.0 && online("d2") == 0.0) // s1 devices offline
       assert(online("d3") == 1.0)                        // s2 device untouched
     } finally q.stop()
+  }
+
+  test("server watchdog with a checkpoint dir: a restart resumes the committed batches") {
+    import graft.streaming.CurrentValuesSink.ModRow
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Timestamp)]
+    val withServer = input.toDF().toDF("server", "source_ts")
+    val dim = Seq(("d1", "s1"), ("d2", "s1"), ("d3", "s2")).toDF("device", "server")
+    val target = new InMemoryTarget
+    target.upsert(Seq("d1", "d2", "d3").map(d => ModRow(d, CurrentValues.OnlineMeasure, 1.0, 1.0, "T0")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-watchdog").toFile
+    def start() = IngestPipeline.watchdogQuery(withServer, dim, target,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"), Some(dir.getPath))
+    val first = start()
+    try {
+      input.addData(("s1", ts("2024-01-01 00:00:00")), ("s2", ts("2024-01-01 00:00:00")))
+      first.processAllAvailable()
+    } finally first.stop()
+    assert(new java.io.File(dir, "watchdog/commits/0").exists())
+    // s1 never speaks again: only the checkpointed state remembers it
+    val restarted = start()
+    try {
+      input.addData(("s2", ts("2024-01-01 00:04:00")))
+      restarted.processAllAvailable()
+      input.addData(("s2", ts("2024-01-01 00:08:00")))
+      restarted.processAllAvailable()
+      assert(restarted.recentProgress.map(_.batchId).min >= 1, "the restart began again at batch 0")
+      val online = target.snapshot.map(r => r.device -> r.measure_value).toMap
+      assert(online("d1") == 0.0 && online("d2") == 0.0)
+      assert(online("d3") == 1.0)
+    } finally restarted.stop()
   }
 
   test("DataSource V2 pipeline: simulated source feeds both paths to the target") {
