@@ -15,7 +15,7 @@ import graft.operators.BrowseJobRegistry
 import graft.operators.CurrentValues.OnlineMeasure
 import graft.operators.DtoMapping.ConnectionDto
 import graft.sources.{FeedTransport, MeasureFeed, MeasureSourceProvider}
-import graft.streaming.{ConfigReload, CurrentValuesSink, FusedPipeline, IngestPipeline, IngestProfile, JdbcUpsert}
+import graft.streaming.{ConfigReload, CurrentValuesSink, IngestPipeline, IngestProfile, JdbcUpsert}
 
 /** End-to-end streaming soak: one sustained run of the deployed pipeline
   * through every fault the reference's service must ride out — config
@@ -36,7 +36,7 @@ import graft.streaming.{ConfigReload, CurrentValuesSink, FusedPipeline, IngestPi
   *
   * The pipeline is a child JVM ([[SoakChild]]) that runs as deployed:
   * [[ConfigReload]] over the config directory → one socket source per
-  * connection → [[IngestPipeline]] (or [[FusedPipeline]]) on the RocksDB
+  * connection → [[IngestPipeline]] on the RocksDB
   * state store, plus production's watchdog and heartbeat queries, all
   * checkpointed under a digest of the config they loaded. At two seeded
   * instants the supervisor `kill -9`s the child (no shutdown hooks,
@@ -134,8 +134,7 @@ object Soak {
 
   private[graft] val Db = "soak"
   private[graft] val AesKey = "0123456789abcdef0123456789abcdef"
-  // the ingest mode and freshness profile the child runs (and the artifact records)
-  private[graft] lazy val Pipeline = sys.env.getOrElse("SPARK_GRAFT_SOAK_PIPELINE", "split")
+  // the freshness profile the child runs (and the artifact records)
   private[graft] lazy val Profile = sys.env.getOrElse("SPARK_GRAFT_SOAK_PROFILE", "default")
 
   private final case class TimelineEvent(wallS: Double, event: String)
@@ -386,7 +385,7 @@ object Soak {
     val tree = Harness.gitTree()
     val json =
       s"""{"metric":"soak","commit":${q(tree.stripSuffix("+dirty"))},"dirty":${tree.endsWith("+dirty")},""" +
-      s""""nproc":${Runtime.getRuntime.availableProcessors()},"cpus":$cpus,"pipeline":${q(Pipeline)},"profile":${q(Profile)},""" +
+      s""""nproc":${Runtime.getRuntime.availableProcessors()},"cpus":$cpus,"profile":${q(Profile)},""" +
       s""""state_store":"rocksdb","db":"pg","duration_sec":$durationS,"kill_seed":$killSeed,""" +
       s""""kill_at_s":${killAts.map(k => f"$k%.1f").mkString("[", ",", "]")},"child_exits":$exitsJson,""" +
       s""""launches":${launches.get()},"offered":$offered,"offered_a":$offeredA,"offered_b":$offeredB,""" +
@@ -454,8 +453,8 @@ object SoakChild {
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
         val counted = p.name match {
-          // value-path admission: the split value query or the fused one
-          case "graft-values" | "graft-fused" => delivered.addAndGet(p.numInputRows); true
+          // value-path admission
+          case "graft-values" => delivered.addAndGet(p.numInputRows); true
           // the watchdog's state operator removes a server's state only
           // when it emits that server's silence event
           case "graft-watchdog" => silences.addAndGet(p.stateOperators.map(_.numRowsRemoved).sum); true
@@ -481,9 +480,8 @@ object SoakChild {
       // and lets live values re-online the devices still configured
       // (`Services/OpcSubscribeService.cs:257-259`); without it a deleted
       // server's devices would stay online forever
-      if (fresh) target.offlineReset(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-        .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now()))
+      if (fresh) target.offlineReset(
+        graft.functions.ScalarOps.lastUpdatedString(java.time.Instant.now()))
       println(s"[child] launch ${ckpt.getName} (${if (fresh) "fresh" else "resumed"}): " +
         conns.map(_.url).mkString(", "))
       val sources = conns.map { conn =>
@@ -501,9 +499,7 @@ object SoakChild {
           .load()
       }
       val raw = sources.map(_._2).reduce(_ union _)
-      val handle =
-        if (Soak.Pipeline == "fused") FusedPipeline.start(raw, target, 1.0, 0.0, profile, Some(ckpt.getPath))
-        else IngestPipeline.start(raw, target, 1.0, 0.0, profile, Some(ckpt.getPath))
+      val handle = IngestPipeline.start(raw, target, 1.0, 0.0, profile, Some(ckpt.getPath))
       handleRef.set(handle)
       val withServer = sources.map { case (url, df) => df.withColumn("server", lit(url)) }.reduce(_ union _)
       watchdogRef.set(IngestPipeline.watchdogQuery(
@@ -514,7 +510,7 @@ object SoakChild {
     // the heartbeat is stateless and runs once for the JVM's lifetime
     val heartbeat = IngestPipeline.heartbeatQuery(spark, target, profile.heartbeatTrigger)
     val reload = ConfigReload.watch(new File(configDir))(() => launch())
-    println(s"[child] incarnation $incarnation (${Soak.Pipeline}/${Soak.Profile}) started")
+    println(s"[child] incarnation $incarnation (${Soak.Profile}) started")
 
     val stopFile = new File(ckptRoot, "STOP") // the supervisor's drain request
     while (!stopFile.exists()) Thread.sleep(500)

@@ -60,8 +60,16 @@ object ScalarOps {
     * `yyyy-MM-ddTHH:mm:ss.ffffff` UTC (`Services/OpcSubscribeService.cs:555`).
     * Session TZ must be UTC (pinned in build.sbt / Verify).
     */
-  def lastUpdatedString(ts: Column): Column =
-    date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+  def lastUpdatedString(ts: Column): Column = date_format(ts, C4Pattern)
+
+  /** Driver-side twin of [[lastUpdatedString]] for the control-plane
+    * statements (K3 reset, K4 heartbeat): the same text, formatted in UTC.
+    */
+  def lastUpdatedString(ts: java.time.Instant): String = C4Format.format(ts)
+
+  private final val C4Pattern = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+  private val C4Format = java.time.format.DateTimeFormatter
+    .ofPattern(C4Pattern).withZone(java.time.ZoneOffset.UTC)
 
   /** Plain timestamp rendering used for oracle-compared outputs (avoids
     * parquet timestamp-encoding mismatches between engines).

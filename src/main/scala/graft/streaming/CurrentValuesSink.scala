@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.operators.CurrentValues
@@ -171,6 +171,23 @@ object CurrentValuesSink {
       .select("device", "measure_name", "tag_value", "measure_value", "last_updated")
       .as[ModRow]
     latest.foreachPartition((rows: Iterator[ModRow]) => target.upsertPartition(rows))
+  }
+
+  /** The one writer of the myPV_online rows, for the liveness sink and the
+    * watchdog's offline fan-out: each `device` row of `rows` lands as its
+    * online flag `online` stamped `ts`, partition by partition on the
+    * executors.
+    */
+  def upsertOnline(rows: DataFrame, online: Column, ts: Column,
+                   target: UpsertTarget): Unit = {
+    import rows.sparkSession.implicits._
+    rows.select(col("device"),
+        lit(CurrentValues.OnlineMeasure).as("measure_name"),
+        online.as("tag_value"),
+        online.as("measure_value"),
+        graft.functions.ScalarOps.lastUpdatedString(ts).as("last_updated"))
+      .as[ModRow]
+      .foreachPartition((it: Iterator[ModRow]) => target.upsertPartition(it))
   }
 
   /** Wire a gated measure stream into the sink via foreachBatch, 5 s

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import graft.operators.{CurrentValues, Gates}
+import graft.operators.Gates
 import graft.streaming.CurrentValuesSink.UpsertTarget
 
 /** The reference's full data path (SURVEY.md §3.1) wired end-to-end in
@@ -30,13 +30,6 @@ import graft.streaming.CurrentValuesSink.UpsertTarget
   * in event time (deterministic under replay — SURVEY.md §7.4).
   */
 object IngestPipeline {
-
-  /** Driver-side twin of ScalarOps.lastUpdatedString (C4 µs format, UTC). */
-  private def formatTs(ts: java.sql.Timestamp): String =
-    java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(ts.toInstant)
 
   final case class Handle(valueQuery: StreamingQuery, livenessQuery: StreamingQuery) {
     def stop(): Unit = { valueQuery.stop(); livenessQuery.stop() }
@@ -102,19 +95,11 @@ object IngestPipeline {
     val writer = Liveness.onlineEvents(MeasureStream.typed(g), watermarked = true)
       .writeStream.outputMode("append").trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Liveness.OnlineEvent], _: Long) =>
-        import batch.sparkSession.implicits._
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("device").orderBy(col("event_ts").desc)
-        val rows = batch.toDF()
+        val latest = batch.toDF()
           .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("device"),
-            lit(CurrentValues.OnlineMeasure).as("measure_name"),
-            col("online").as("tag_value"),
-            col("online").as("measure_value"),
-            graft.functions.ScalarOps.lastUpdatedString(col("event_ts")).as("last_updated"))
-          .as[CurrentValuesSink.ModRow]
-        rows.foreachPartition(
-          (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
+        CurrentValuesSink.upsertOnline(latest, col("online"), col("event_ts"), target)
       }
       .queryName("graft-liveness")
     checkpointDir
@@ -148,7 +133,8 @@ object IngestPipeline {
     spark.readStream.format("rate").option("rowsPerSecond", 1).load()
       .writeStream.outputMode("append").trigger(trigger)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        CurrentValuesSink.heartbeat(target, formatTs(now()))
+        CurrentValuesSink.heartbeat(target,
+          graft.functions.ScalarOps.lastUpdatedString(now().toInstant))
       }
       .queryName("graft-heartbeat").start()
   }
@@ -173,20 +159,11 @@ object IngestPipeline {
     val writer = ServerWatchdog.silenceEvents(withServer)
       .writeStream.outputMode("append").trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[ServerWatchdog.SilenceEvent], _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
         // broadcast the (device, server) dim against the silence events:
         // the fan-out join and the writes run on the executors
-        val rows = batch.toDF()
+        val devices = batch.toDF()
           .join(broadcast(deviceDim.select("device", "server")), Seq("server"))
-          .select(col("device"),
-            lit(CurrentValues.OnlineMeasure).as("measure_name"),
-            lit(0.0).as("tag_value"),
-            lit(0.0).as("measure_value"),
-            graft.functions.ScalarOps.lastUpdatedString(col("silent_since")).as("last_updated"))
-          .as[CurrentValuesSink.ModRow]
-        rows.foreachPartition(
-          (it: Iterator[CurrentValuesSink.ModRow]) => target.upsertPartition(it))
+        CurrentValuesSink.upsertOnline(devices, lit(0.0), col("silent_since"), target)
       }
       .queryName("graft-watchdog")
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", s"$d/watchdog")).start()

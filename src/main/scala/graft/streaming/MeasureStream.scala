@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.types._
 
 /** The streaming measure-event model (reference:
@@ -56,30 +55,13 @@ object MeasureStream {
       .dropDuplicatesWithinWatermark(
         "device", "measure_name", "source_ts", "raw_value", "status_ok")
 
-  /** F1/F2/F3 gates in streaming form. The staleness gate compares against
-    * the ingest clock (`current_timestamp()`), matching the reference's
-    * `|UtcNow - SourceTimestamp| <= TimeoutMs`
-    * (`Services/OpcSubscribeService.cs:558-559`); in batch-oracle runs the
-    * deterministic `Gates.stalenessGate` is used instead.
+  /** Event time in µs. `Timestamp.getTime` is ms-truncated; the nanos
+    * field carries the full sub-second, and the batch operators order by
+    * `unix_micros`, so the streaming twins' parity on sub-ms data needs
+    * µs too.
     */
-  def gated(df: DataFrame, timeoutMillis: Long): DataFrame =
-    df.filter(col("measure_name") =!= graft.operators.CurrentValues.OnlineMeasure)
-      .filter(abs(unix_millis(current_timestamp()) - unix_millis(col("source_ts"))) <= timeoutMillis)
-
-  /** A rate-source demo stream shaped like the measure schema — lets the
-    * whole pipeline run end-to-end with zero external dependencies
-    * (`spark.readStream.format("rate")` is a built-in). Devices/measures
-    * cycle deterministically with the tick value.
-    */
-  def rateDemo(spark: SparkSession, rowsPerSecond: Int = 100, nDevices: Int = 10): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-      .select(
-        concat(lit("dev-"), (col("value") % nDevices).cast(StringType)).as("device"),
-        concat(lit("m"), (col("value") % 3).cast(StringType)).as("measure_name"),
-        (col("value") % 1000).cast(DoubleType).as("raw_value"),
-        col("timestamp").as("source_ts"),
-        (col("value") % 10 =!= 0).as("status_ok"))
+  private[streaming] def micros(t: Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 }
 
 /** One OPC UA notification value (typed). */

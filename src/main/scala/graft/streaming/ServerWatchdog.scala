@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * timeout (same determinism argument as [[Liveness]]). Reconnection is
   * the source connector's job (graft.sources); this operator only emits
   * the silence events that drive the offline fan-out —
-  * `silenceEvents ⋈ devicesPerServer` (broadcast, the dim is tiny)
-  * produces the per-device myPV_online=0 rows.
+  * [[IngestPipeline.watchdogQuery]] joins them with the (device, server)
+  * dim (broadcast, the dim is tiny) into per-device myPV_online=0 rows.
   */
 object ServerWatchdog {
 
@@ -51,14 +51,4 @@ object ServerWatchdog {
       .flatMapGroupsWithState[ServerState, SilenceEvent](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
   }
-
-  /** Fan a silence event out to per-device offline rows: broadcast join
-    * against the device dimension (device, server).
-    */
-  def offlineRows(silence: DataFrame, deviceDim: DataFrame): DataFrame =
-    silence.join(broadcast(deviceDim), Seq("server"))
-      .select(col("device"),
-        lit(graft.operators.CurrentValues.OnlineMeasure).as("measure_name"),
-        lit(0.0).as("online"),
-        col("silent_since"))
 }

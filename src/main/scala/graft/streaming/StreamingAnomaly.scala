@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of [[graft.operators.Historian.rollingAnomalies]]: the
   * same integer-only z² test — (n·q − S)² > k²·(n·S2 − S²) over the
@@ -26,14 +27,6 @@ object StreamingAnomaly {
   final case class Flagged(k: Long, tie: Long, q: Long, n: Long,
                            dev2: Long, bound: Long)
   final case class RingState(vals: Vector[Long], lastTus: Long)
-
-  /** Event-time in µs — Timestamp.getTime is ms-truncated; the nanos
-    * field carries the full sub-second, and the batch operator orders by
-    * `unix_micros`, so parity on sub-ms data demands µs here too (the
-    * StreamingHistorian convention).
-    */
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(lookback: Int, minN: Int, k2: Long,
                                 ttlMillis: Long)(

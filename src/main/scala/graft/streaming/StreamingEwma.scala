@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of [[graft.operators.Historian.ewmaForecast]]: the
   * truncated dyadic EWMA evaluated incrementally — state is the last 16
@@ -25,9 +26,6 @@ object StreamingEwma {
   final case class Forecast(k: String, tie: Long, q: Long, fnum: Long,
                             forecast: Double, resid_scaled: Long)
   final case class RingState(vals: Vector[Long], lastTus: Long)
-
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(ttlMillis: Long)(
       key: String,

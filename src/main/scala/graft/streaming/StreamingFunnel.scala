@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of [[graft.operators.Funnel.ordered]]: the per-user
   * stage state machine evaluated incrementally. The batch operator binds
@@ -24,9 +25,6 @@ object StreamingFunnel {
   final case class Obs(u: Long, ts: Timestamp, t: String, tie: Long)
   final case class FunnelState(stage: Int, bindTus: Long)
   final case class Reached(u: Long, stage: Int, stage_name: String, bind_tus: Long)
-
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(stages: IndexedSeq[String],
                                 maxGapUs: Option[Long], ttlMillis: Long)(

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of [[graft.operators.Historian.twa]]: the running
   * step-interpolated time-weighted average per device, folded
@@ -27,13 +28,6 @@ object StreamingHistorian {
   final case class TwaState(lastTus: Long, lastQ: Long,
                             num: Long, den: Long, qsum: Long, n: Long)
   final case class TwaRow(k: Long, twa: Double, n_obs: Long)
-
-  /** Event-time in µs — Timestamp.getTime is ms-truncated; the nanos
-    * field carries the full sub-second, and the batch operator's
-    * `unix_micros` keeps µs, so parity demands them here too.
-    */
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(
       key: Long,

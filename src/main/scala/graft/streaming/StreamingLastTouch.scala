@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of [[graft.operators.Funnel.lastTouch]]: conversion →
   * most recent preceding touch within the lookback bound, evaluated
@@ -22,9 +23,6 @@ object StreamingLastTouch {
   final case class TouchState(tus: Long, tie: Long)
   final case class Attribution(u: Long, conv_id: Long,
                                touch_id: Option[Long], gap_s: Option[Long])
-
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(touchType: String, convType: String,
                                 gapUs: Long, ttlMillis: Long)(

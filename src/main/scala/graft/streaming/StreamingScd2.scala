@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of [[graft.operators.Scd2.intervals]]: the
   * slowly-changing-dimension type-2 build evaluated incrementally. The
@@ -27,9 +28,6 @@ object StreamingScd2 {
   final case class RunState(state: String, fromTus: Long, n: Long)
   final case class Closed(k: Long, state: String, valid_from_tus: Long,
                           valid_to_tus: Long, n_obs: Long)
-
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(
       key: Long,

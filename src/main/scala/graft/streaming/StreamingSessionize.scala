@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of q25's inactivity-gap sessionization: the same
   * gap>threshold split evaluated incrementally per user. Batch assigns
@@ -30,12 +31,6 @@ object StreamingSessionize {
   final case class SessState(idx: Long, startTus: Long, lastTus: Long, n: Long)
   final case class Sess(u: Long, session_id: Long, start_tus: Long,
                         end_tus: Long, n_events: Long)
-
-  /** Event-time in µs — Timestamp.getTime is ms-truncated; sub-ms parity
-    * demands the StreamingHistorian micros convention.
-    */
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(gapUs: Long)(
       key: Long,

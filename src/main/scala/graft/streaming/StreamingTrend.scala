@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import graft.streaming.MeasureStream.micros
 
 /** Streaming twin of [[graft.operators.Historian.trendSlope]]: the OLS
   * sufficient statistics (n, Σx, Σy, Σxy, Σx²) folded incrementally per
@@ -27,9 +28,6 @@ object StreamingTrend {
                               sxy: Long, sxx: Long)
   final case class TrendRow(k: Long, n: Long, num: Long, den: Long,
                             slope: Option[Double])
-
-  private def micros(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
   private[streaming] def update(
       key: Long,

@@ -25,6 +25,7 @@ class IngestPipelineSpec extends SparkSpec {
       input.addData(e1, e1, // duplicate dropped by T8
         MeasureEvent("d1", "temp", 6.0, ts("2024-01-01 00:00:09"), status_ok = true),
         MeasureEvent("d2", "rpm", 3.0, ts("2024-01-01 00:00:09"), status_ok = false),
+        MeasureEvent("d3", "amps", 1.5, ts("2024-01-01 00:00:10"), status_ok = true),
         MeasureEvent("d1", CurrentValues.OnlineMeasure, 9.9,
           ts("2024-01-01 00:00:10"), status_ok = true)) // F3: never subscribable
       handle.processAllAvailable()
@@ -42,7 +43,55 @@ class IngestPipelineSpec extends SparkSpec {
       // liveness path: good d1 → online 1, bad-status d2 → online 0
       assert(snap(("d1", CurrentValues.OnlineMeasure)).measure_value == 1.0)
       assert(snap(("d2", CurrentValues.OnlineMeasure)).measure_value == 0.0)
-    } finally handle.stop()
+      assert(snap(("d3", CurrentValues.OnlineMeasure)).measure_value == 1.0)
+
+      // d3 then goes silent; d1 keeps ticking far enough to push the
+      // watermark past d3's 60 s event-time timeout
+      input.addData(
+        MeasureEvent("d1", "temp", 7.0, ts("2024-01-01 00:02:30"), status_ok = true))
+      handle.processAllAvailable()
+      input.addData(
+        MeasureEvent("d1", "temp", 8.0, ts("2024-01-01 00:05:00"), status_ok = true))
+      handle.processAllAvailable()
+      // d2 recovers: bad → good re-admission
+      input.addData(
+        MeasureEvent("d2", "rpm", 4.5, ts("2024-01-01 00:05:01"), status_ok = true))
+      handle.processAllAvailable()
+
+      val end = target.snapshot.map(r => (r.device, r.measure_name) -> r).toMap
+      assert(end(("d3", CurrentValues.OnlineMeasure)).measure_value == 0.0) // timeout
+      assert(end(("d3", "amps")).measure_value == 4.0)                      // 2*1.5+1, kept
+      assert(end(("d1", "temp")).measure_value == 17.0)                     // 2*8+1
+      assert(end(("d1", CurrentValues.OnlineMeasure)).measure_value == 1.0)
+      assert(end(("d2", "rpm")).measure_value == 10.0)                      // 2*4.5+1
+      assert(end(("d2", CurrentValues.OnlineMeasure)).measure_value == 1.0) // re-admitted
+    } finally { handle.stop(); target.close() }
+  }
+
+  test("start runs the two named queries, each with one dedup state operator") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[MeasureEvent]
+    val target = new InMemoryTarget
+    val before = spark.streams.active.map(_.id).toSet
+    val handle = IngestPipeline.start(input.toDF(), target,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+    try {
+      input.addData(
+        MeasureEvent("d1", "temp", 4.0, ts("2024-01-01 00:00:01"), status_ok = true))
+      handle.processAllAvailable()
+      // the benchmark keys its probes on these two query names and reads
+      // the dedup drops of each: a pipeline of another shape must change
+      // the benchmark first
+      val started = spark.streams.active.filterNot(q => before(q.id))
+      assert(started.map(_.name).sorted.toSeq == Seq("graft-liveness", "graft-values"),
+        s"IngestPipeline.start must start exactly graft-values and graft-liveness, " +
+          s"started: ${started.map(_.name).mkString(", ")}")
+      started.foreach { q =>
+        val ops = q.lastProgress.stateOperators.map(_.operatorName)
+        assert(ops.count(_.toLowerCase.contains("dedup")) == 1,
+          s"${q.name} must report one dedup state operator, reports: ${ops.mkString(", ")}")
+      }
+    } finally { handle.stop(); target.close() }
   }
 
   test("both queries count exactly the injected redeliveries as dropped duplicates") {
